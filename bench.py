@@ -171,6 +171,15 @@ def main() -> None:
         "runs": runs,
         "value_basis": "sum of per-query medians (r1-r4: best-of-2 mins)",
         "sf": float(sf),
+        # The configuration the timings ran under, read back from the
+        # live session rather than from the environment.
+        "cpus": spark.sparkContext.defaultParallelism,
+        "sf_dir": sf_dir,
+        "spark.sql.shuffle.partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        ),
+        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled")
+        == "true",
         "load1": round(load1, 2),
         "load15": round(load15, 2),
         "uptime_sec": round(uptime_sec, 1),

@@ -239,21 +239,24 @@ def hashed_sets(df, col: str):
     The guard itself is one linear token-stream aggregate with partial
     (map-side) distinct — no driver data transfer beyond two counts.
 
-    Preconditions (hold at every call site): array elements are
-    non-NULL (split()/filtered shingle outputs — countDistinct ignores
-    NULLs, xxhash64(NULL) does not, so a NULL element could evade the
-    guard); both intersect operands derive from THIS df's ``col``.
-    NULL arrays (NULL text) propagate NULL through transform exactly
-    as through the string path."""
+    NULL elements: ``countDistinct`` skips NULL but ``xxhash64(NULL)``
+    is a real value (the seed), so a NULL element adds one hash the
+    token count lacks and can offset a real collision in the equality
+    test. The same aggregate therefore also counts NULL elements, and
+    any NULL element keeps the string arrays. Precondition (holds at
+    every call site): both intersect operands derive from THIS df's
+    ``col``. NULL arrays (NULL text) explode to no rows and propagate
+    NULL through transform exactly as through the string path."""
     probe = (
         df.select(F.explode(col).alias("_t"))
         .agg(
             F.countDistinct("_t").alias("d"),
             F.countDistinct(F.xxhash64("_t")).alias("h"),
+            F.count(F.when(F.col("_t").isNull(), 1)).alias("n"),
         )
         .first()
     )
-    if probe["d"] != probe["h"]:  # collision: keep exact strings
+    if probe["d"] != probe["h"] or probe["n"]:  # collision or NULL: keep strings
         return df
     return df.withColumn(
         col, F.transform(F.col(col), lambda x: F.xxhash64(x))

@@ -113,9 +113,19 @@ def global_prefix_min_excl(
     in-partition min of each partition's first row). ``min``/``least``
     ignore NULL values, so NULL ``value`` rows never pollute the
     prefix, matching ``min() OVER`` semantics. Added r12 for the
-    skyline sweep (wl_pareto_frontier)."""
+    skyline sweep (wl_pareto_frontier).
+
+    ``order`` holds plain ascending expressions. A row with a NULL
+    order key has no place in the order: its ``value`` never feeds
+    the prefix and its ``out_col`` is NULL. (Spark sorts NULLs first,
+    so without this a NULL-key row's value would leak into every
+    other row's prefix; DuckDB sorts them last.)"""
+    keyed = F.lit(True)
+    for c in order:
+        keyed = keyed & c.isNotNull()
+    v = F.when(keyed, F.col(value))
     d = df.repartitionByRange(*order).withColumn("_pid", F.spark_partition_id())
-    pstats = d.groupBy("_pid").agg(F.min(F.col(value)).alias("_pmin"))
+    pstats = d.groupBy("_pid").agg(F.min(v).alias("_pmin"))
     w_prev = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
     offs = pstats.select("_pid", F.min("_pmin").over(w_prev).alias("_off"))
     tagged = d.join(F.broadcast(offs), "_pid")
@@ -125,5 +135,5 @@ def global_prefix_min_excl(
         .rowsBetween(W.unboundedPreceding, -1)
     )
     return tagged.withColumn(
-        out_col, F.least(F.min(F.col(value)).over(w_in), F.col("_off"))
+        out_col, F.when(keyed, F.least(F.min(v).over(w_in), F.col("_off")))
     ).drop("_pid", "_off")

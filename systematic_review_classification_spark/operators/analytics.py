@@ -4384,7 +4384,8 @@ def wl_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (functions/ranks.global_prefix_min_excl — never a single-task
     # window); re-attach is one equi-join on price. NULL price/size
     # rows: every comparison is NULL in both forms → never dominated,
-    # never dominating (min ignores NULLs; the NULL-price group never
+    # never dominating (min ignores NULLs; the prefix-min helper keeps
+    # the NULL-price group out of every prefix; that group never
     # equi-joins; coalesce keeps the row). O(n²) → O(n) + sort shuffle.
     g = p.groupBy(F.col("p_retailprice").alias("_pr")).agg(
         F.min("p_size").alias("_m_eq")

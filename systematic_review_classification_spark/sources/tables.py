@@ -1,8 +1,38 @@
 """Table loaders for the test star schema (TESTDATA.md).
 
 Tables: region nation customer supplier part orders lineitem events
-documents embeddings — one parquet file each under an sf dir.
+documents embeddings — one parquet file (or a directory of part files)
+each under an sf dir.
 
+Schema memo
+-----------
+Inferring a parquet schema starts one Spark job to read the footers,
+and most queries load the same few tables again and again. ``load``
+therefore remembers, per SparkSession, each table path's inferred
+schema and its drift-checked repairs (the events.ts normalization and
+the canonical-width casts below). A repeat ``load`` of an unchanged
+path reads with ``spark.read.schema(<memoized schema>)``, which starts
+no job, and applies the remembered repairs without asking Spark for
+``dtypes`` again.
+
+* What is cached: metadata only — the schema and the repair list,
+  never rows. Every call returns a NEW DataFrame with fresh attribute
+  ids, so a query may load the same table twice and self-join it.
+* What invalidates it: the path's fingerprint, ``(name, size,
+  mtime_ns, inode)`` of the file, or of every file under a
+  ``{t}.parquet/`` directory. A rewrite, an added or removed part file
+  or a replaced directory misses and re-infers. A path that cannot be
+  ``os.stat``-ed (``hdfs://``, ``s3a://``) bypasses the memo.
+* Scope: one memo per session object, created on first use. A new
+  session, also one built after ``spark.stop()``, starts empty.
+* A miss runs the full inference and drift check; a drift
+  ``ValueError`` is never memoized, so it is raised on every call.
+* Entries are immutable and stored whole, and the fingerprint is taken
+  before the read it validates, so concurrent or racing loads can only
+  repeat an inference, never pair a schema with a newer fingerprint.
+
+events.ts
+---------
 The only table needing special handling is ``events``: its ``ts``
 column is parquet TIMESTAMP(NANOS). How Spark surfaces that type has
 DRIFTED across environments — observed variants:
@@ -25,8 +55,14 @@ tests/test_invariants.py::test_events_ts_sanity.
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from systematic_review_classification_spark.session import ensure_confs
 
@@ -115,7 +151,10 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize an events timestamp column to ``timestamp_ntz`` (µs)
     whatever the reader delivered: timestamp/ntz pass through; bigint is
     unit-detected by magnitude per row (ns → truncating ``div 1000``)."""
-    dtype = dict(df.dtypes).get(col)
+    return _normalize_ts(df, col, dict(df.dtypes).get(col))
+
+
+def _normalize_ts(df: DataFrame, col: str, dtype: str | None) -> DataFrame:
     if dtype == "bigint":
         us = F.when(
             F.abs(F.col(col)) >= F.lit(_NS_MAGNITUDE_CUTOFF),
@@ -127,31 +166,87 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+class _Entry(NamedTuple):
+    """One memoized table read: the path fingerprint it is valid for,
+    the inferred parquet schema, and the repairs ``load`` applies."""
+
+    stamp: tuple
+    schema: StructType
+    ts_dtype: str | None  # events.ts as read, before normalization
+    casts: tuple[tuple[str, str], ...]  # (column, canonical type)
+
+
+# session → {path: _Entry}. Weak keys: a stopped, dropped session takes
+# its memo with it, and a new session object starts empty.
+_MEMO: weakref.WeakKeyDictionary[SparkSession, dict[str, _Entry]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(name, size, mtime_ns, inode)`` of the file, or of every file
+    under the directory, sorted; None when the path is not local."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns, st.st_ino),)
+        files = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                s = os.stat(f)
+                files.append((f, s.st_size, s.st_mtime_ns, s.st_ino))
+        return tuple(sorted(files))
+    except (OSError, ValueError):
+        return None
+
+
+def _repairs(name: str, schema: StructType) -> tuple[str | None, tuple]:
+    """The events.ts dtype to normalize and the canonical-width casts
+    for a table read with ``schema``; raises ``ValueError`` on a drift
+    that is not an exact widening."""
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+    ts_dtype = None
+    if name == "events":
+        ts_dtype = dtypes.get("ts")
+        if ts_dtype is not None:
+            dtypes["ts"] = "timestamp_ntz"
+    casts = []
+    for c, t in _CANONICAL.get(name, {}).items():
+        got = dtypes.get(c)
+        if got is None or got == t:
+            continue
+        if got not in _EXACT_WIDENINGS.get(t, ()):  # lossy / narrowing drift
+            raise ValueError(
+                f"{name}.{c}: physical type {got!r} is not an exact widening"
+                f" to canonical {t!r} — refusing to narrow silently at ingest"
+                " (fix the upstream export or extend _EXACT_WIDENINGS if the"
+                " conversion is provably exact)"
+            )
+        casts.append((c, t))
+    return ts_dtype, tuple(casts)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table; normalizes events.ts to timestamp_ntz(µs)
     and widens any width-drifted scalar column to its canonical
     logical type (exact, no-op on a canonical corpus — see
-    ``_CANONICAL``)."""
+    ``_CANONICAL``). Repeat reads of an unchanged local path reuse the
+    session's schema memo (module docstring)."""
     ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = normalize_event_ts(df)
-    want = _CANONICAL.get(name)
-    if want:
-        dtypes = dict(df.dtypes)
-        casts: dict[str, F.Column] = {}
-        for c, t in want.items():
-            got = dtypes.get(c)
-            if got is None or got == t:
-                continue
-            if got not in _EXACT_WIDENINGS.get(t, ()):  # lossy / narrowing drift
-                raise ValueError(
-                    f"{name}.{c}: physical type {got!r} is not an exact widening"
-                    f" to canonical {t!r} — refusing to narrow silently at ingest"
-                    " (fix the upstream export or extend _EXACT_WIDENINGS if the"
-                    " conversion is provably exact)"
-                )
-            casts[c] = F.col(c).cast(t)
-        if casts:
-            df = df.withColumns(casts)
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _fingerprint(path)
+    memo = _MEMO.setdefault(spark, {})
+    entry = memo.get(path)
+    if stamp is not None and entry is not None and entry.stamp == stamp:
+        df = spark.read.schema(entry.schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        entry = _Entry(stamp, df.schema, *_repairs(name, df.schema))
+        if stamp is not None:
+            memo[path] = entry
+    if entry.ts_dtype is not None:
+        df = _normalize_ts(df, "ts", entry.ts_dtype)
+    if entry.casts:
+        df = df.withColumns({c: F.col(c).cast(t) for c, t in entry.casts})
     return df

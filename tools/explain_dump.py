@@ -14,7 +14,7 @@ import sys
 repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo_root)
 
-from pyspark.sql import SparkSession  # noqa: E402
+from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
 
 
 def main() -> None:
@@ -22,15 +22,8 @@ def main() -> None:
     keys = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(outdir, exist_ok=True)
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("explain-dump")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from systematic_review_classification_spark import all_queries
 
     queries = all_queries()
     for key in keys:

@@ -22,11 +22,12 @@ can be (re)derived from evidence instead of memory.
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
 
 
 def plan_features(df) -> dict:
@@ -47,15 +48,8 @@ def plan_features(df) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .appName("plan-audit")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from systematic_review_classification_spark import all_queries
 
     out: dict[str, dict] = {}
     for key, fn in all_queries().items():

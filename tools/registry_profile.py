@@ -20,29 +20,19 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "8")
-        # 446 keys in ONE JVM: several operators persist loop
-        # invariants; at the default 1 g driver heap the accumulated
-        # cache killed the JVM ~270 keys in (r11). Size the heap and
-        # drop each key's cache before moving on.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "12g"))
-        .appName("registry-profile")
-        .getOrCreate()
-    )
+    # The bench's session, so per-key times compare with bench.py. 446
+    # keys run in ONE JVM and several operators persist loop
+    # invariants: at a 1 g driver heap the accumulated cache killed the
+    # JVM ~270 keys in (r11), so each key's cache is dropped below.
+    spark = get_session(app_name="registry-profile")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from systematic_review_classification_spark import all_queries
 
     times: dict[str, float] = {}
     errors: dict[str, str] = {}

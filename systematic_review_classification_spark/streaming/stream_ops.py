@@ -232,68 +232,6 @@ _STATE = T.StructType(
 )
 
 
-def tws_available() -> bool:
-    """Capability probe for Spark 4's transformWithStateInPandas.
-
-    The richer state API's Python worker needs ``google.protobuf``
-    (its state-server messages are protobuf-encoded); this container
-    ships a broken protobuf (``No module named 'google'``), so the
-    probe returns False here and ``stream_stateful`` keeps the
-    ``applyInPandasWithState`` path. On a healthy cluster the probe
-    flips True and the richer API swaps in with identical semantics —
-    probe-don't-hardcode so the engine heals WITH the environment
-    (r10 verdict item 8). Probing the exact failing import (not
-    pyspark's wrapper module, which imports clean) is what makes the
-    probe meaningful.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-    except Exception:
-        return False
-    return True
-
-
-def _stateful_via_tws(stream: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of the applyInPandasWithState
-    path: same per-user (n, v) running state, same update-mode
-    emission, same output schema — only the state API differs."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, v = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(v, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=_STATE_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 @query(
     "stream_stateful",
     oracle="""
@@ -319,19 +257,9 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = stage_events_dir(sf_dir, "stateful_src")
     stream = read_events_stream(spark, src)
-    # Auto-swap: the richer Spark 4 state API when its worker deps
-    # exist (tws_available probes the exact protobuf import its state
-    # server needs), else applyInPandasWithState — identical state,
-    # emission mode, and output schema either way, so the oracle holds
-    # on both paths. In THIS container the probe is False, making the
-    # branch a verified no-op on the driver's corpus (key not
-    # re-headed; tests/test_stream_state_probe.py pins both facts).
-    if tws_available():
-        updated = _stateful_via_tws(stream)
-    else:
-        updated = stream.groupBy("user_id").applyInPandasWithState(
-            track, _STATE_OUT, _STATE, "update", "NoTimeout"
-        )
+    updated = stream.groupBy("user_id").applyInPandasWithState(
+        track, _STATE_OUT, _STATE, "update", "NoTimeout"
+    )
     qname = run_to_memory(updated, sf_dir, "stateful", "update")
     return spark.table(qname)
 
@@ -724,8 +652,6 @@ def stream_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n += 1
 
     def track(key, pdfs, state):
-        import numpy as np
-
         out = []
         if state.hasTimedOut:
             s, last, cnt = state.get
@@ -735,41 +661,16 @@ def stream_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             s, last, cnt = state.get if state.exists else (None, None, 0)
             rows = pd.concat(list(pdfs)) if pdfs else pd.DataFrame()
             if len(rows):
-                # vectorized gaps-islands (r12, guide §4.2): the
-                # profiled per-batch cost is this function's Python
-                # loop (allUpdatesTimeMs ≈ 7 s summed vs 0.26 s state
-                # commits per batch at sf0.1), so the per-event
-                # interpreter iteration becomes one sorted int64 array
-                # + diff: segment boundaries are gaps > TTL, every
-                # segment but the last closes inline ("gap"), the last
-                # stays open in state — step-for-step identical to the
-                # per-row state machine it replaces (ns -> µs floor
-                # division included)
-                arr = (
-                    rows["ts"].sort_values().to_numpy().astype("int64")
-                    // 1_000
-                )
-                bounds = np.flatnonzero(np.diff(arr) > _TTL_GAP_US) + 1
-                seg_starts = np.concatenate(([0], bounds))
-                seg_ends = np.concatenate((bounds, [len(arr)])) - 1
-                # a carried open session either extends segment 0 (first
-                # event within the gap) or closes on the first event
-                carried = s is not None and arr[0] - last <= _TTL_GAP_US
-                if s is not None and not carried:
-                    out.append((key[0], s, last, cnt, "gap"))
-                nseg = len(seg_starts)
-                for j in range(nseg):
-                    st, en = int(seg_starts[j]), int(seg_ends[j])
-                    seg_s = s if (j == 0 and carried) else int(arr[st])
-                    seg_cnt = (en - st + 1) + (
-                        cnt if (j == 0 and carried) else 0
-                    )
-                    if j < nseg - 1:
-                        out.append(
-                            (key[0], seg_s, int(arr[en]), seg_cnt, "gap")
-                        )
+                rows = rows.sort_values("ts")
+                for t in rows["ts"]:
+                    us = int(t.value // 1_000)  # pandas ns -> µs
+                    if s is None:
+                        s, last, cnt = us, us, 1
+                    elif us - last > _TTL_GAP_US:
+                        out.append((key[0], s, last, cnt, "gap"))
+                        s, last, cnt = us, us, 1
                     else:
-                        s, last, cnt = seg_s, int(arr[en]), seg_cnt
+                        last, cnt = us, cnt + 1
                 state.update((s, last, cnt))
                 # reclaim this user's state once the watermark passes
                 # the session gap horizon. applyInPandasWithState does

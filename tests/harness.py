@@ -94,7 +94,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, key: str = "?") 
 def run_world(
     spark, world_dir: str, tables, excluded, duck_casts=None
 ) -> list[tuple[str, str]]:
-    """World-sweep runner shared by the tests/test_*_world.py tier.
+    """World-sweep runner behind tests/test_worlds.py::test_world_sweep.
 
     Runs EVERY registered key against the world's parquet tables and
     returns the list of (key, failure) pairs — empty means the whole
@@ -105,8 +105,8 @@ def run_world(
     fixture does not prove abort-safety (8 oracled keys aborted on
     ANSI CAST(NaN AS BIGINT) before round 6; the rows-only keys had
     never been priced at all until round 7). One pass prices the full
-    registry per pathological dataset; each world test owns only its
-    fixture rows and its documented exclusions.
+    registry per pathological dataset; each world (tests/worlds.py)
+    owns only its rows and its documented exclusions.
 
     ``duck_casts`` — optional {table: {column: DUCK_TYPE}} applied to
     the oracle views via SELECT * REPLACE, mirroring the ingest-time

@@ -22,6 +22,7 @@ from systematic_review_classification_spark import all_oracles, all_queries
 import duckdb
 
 from tests.harness import canonical_rows
+from tests.worlds import ddl
 
 # Words mix ascii, unicode, quoting, and digits; texts are space-joined
 # so both engines' tokenizers see identical boundaries.
@@ -529,49 +530,15 @@ def test_join_oracles_hold_on_generated_tables(spark, corpus_dir, custs, orders)
     import datetime as dt
 
     path = str(corpus_dir / "joincase")
-    spark.createDataFrame(
-        [(0, "AMERICA"), (1, "EUROPE")], "r_regionkey int, r_name string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/region.parquet")
-    spark.createDataFrame(
-        [(0, "BRAZIL", 0), (1, "FRANCE", 1), (2, "GERMANY", 1)],
-        "n_nationkey int, n_name string, n_regionkey int",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/nation.parquet")
-    spark.createDataFrame(
-        [(1, "sup1", 0, 100.0), (2, "sup2", 1, -5.0), (3, "sup3", 9, 0.0)],
-        "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/supplier.parquet")
-    spark.createDataFrame(
-        [
-            (1, "part1", "Brand#1", "SMALL BRASS", 5, 900.0),
-            (2, "part2", "Brand#2", "LARGE STEEL", 30, 1500.0),
-            (3, "part3", "Brand#1", "MEDIUM COPPER", 15, 1200.0),
-            (4, "part4", "Brand#3", "SMALL STEEL", 50, 400.0),
-        ],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/part.parquet")
-
     c_rows = [
         (k + 1, f"cust{k + 1}", nk, float(bal), seg)
         for k, (nk, seg, bal) in enumerate(custs)
     ]
-    spark.createDataFrame(
-        c_rows,
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
-        " c_mktsegment string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/customer.parquet")
-
     o_rows = [
         (i + 1, ck, stat, cents / 100.0,
          dt.datetime.fromisoformat(day + " 00:00:00"), prio)
         for i, (ck, stat, cents, day, prio) in enumerate(orders)
     ]
-    spark.createDataFrame(
-        o_rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
-
     l_rows = [
         (o[0], (o[0] % 4) + 1, (o[0] % 3) + 1, 1 + (o[0] % 2),
          float(1 + o[0] % 5), 100.0 * (1 + o[0] % 3), 0.05, 0.01,
@@ -579,17 +546,28 @@ def test_join_oracles_hold_on_generated_tables(spark, corpus_dir, custs, orders)
          dt.datetime(1997, 1 + (o[0] % 12), 1))
         for o in o_rows
     ]
-    spark.createDataFrame(
-        l_rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp_ntz",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
+    tables = {
+        "region": [(0, "AMERICA"), (1, "EUROPE")],
+        "nation": [(0, "BRAZIL", 0), (1, "FRANCE", 1), (2, "GERMANY", 1)],
+        "supplier": [(1, "sup1", 0, 100.0), (2, "sup2", 1, -5.0), (3, "sup3", 9, 0.0)],
+        "part": [
+            (1, "part1", "Brand#1", "SMALL BRASS", 5, 900.0),
+            (2, "part2", "Brand#2", "LARGE STEEL", 30, 1500.0),
+            (3, "part3", "Brand#1", "MEDIUM COPPER", 15, 1200.0),
+            (4, "part4", "Brand#3", "SMALL STEEL", 50, 400.0),
+        ],
+        "customer": c_rows,
+        "orders": o_rows,
+        "lineitem": l_rows,
+    }
+    for t, rows in tables.items():
+        spark.createDataFrame(rows, ddl(t)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/{t}.parquet")
 
     queries, oracles = all_queries(), all_oracles()
     con = duckdb.connect()
-    for t in ("region", "nation", "supplier", "part", "customer", "orders", "lineitem"):
+    for t in tables:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}/{t}.parquet/*.parquet')"
         )

@@ -1,50 +1,24 @@
-"""transformWithStateInPandas capability probe (r10 verdict item 8).
-
-`stream_stateful` auto-swaps between Spark 4's richer state API and
-`applyInPandasWithState` based on `tws_available()` — a probe of the
-exact protobuf import the TWS Python worker needs. These tests pass
-EITHER WAY: they pin that the probe answers cleanly, that the result
-matches the batch aggregate on whichever path ran, and (environment
-note, not a contract) that when protobuf is absent the fallback path
-is the one taken.
-"""
+"""stream_stateful's applyInPandasWithState replay must equal the batch
+aggregate it is oracled against."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 
-def test_probe_answers_cleanly_and_matches_env():
-    from systematic_review_classification_spark.streaming.stream_ops import (
-        tws_available,
-    )
-
-    avail = tws_available()
-    assert isinstance(avail, bool)
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        proto_ok = True
-    except Exception:
-        proto_ok = False
-    # the probe must track the actual worker dependency, both ways
-    assert avail == proto_ok
-
-
-def test_stream_stateful_matches_batch_aggregate_on_either_path(spark):
+def test_stream_stateful_matches_batch_aggregate(spark, sf_dir):
     from systematic_review_classification_spark.sources.tables import load
     from systematic_review_classification_spark.streaming.stream_ops import (
         stream_stateful,
     )
 
-    sf = "/root/testdata/sf0.001"
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
-        for r in stream_stateful(spark, sf).collect()
+        for r in stream_stateful(spark, sf_dir).collect()
     }
     want = {
         r["user_id"]: (r["n_events"], r["total_value"])
-        for r in load(spark, sf, "events")
+        for r in load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

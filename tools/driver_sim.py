@@ -1,6 +1,8 @@
 """Simulate the external driver: vanilla session, import contract, smoke + t2."""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 # deliberately vanilla: no nanosAsLong, no UTC tz — the driver's session, not ours
@@ -8,31 +10,15 @@ spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreat
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
+from tests.harness import canonical_rows, duck_con
 
 df = E.entry(spark)
 rows = df.collect()
 print("SMOKE entry(): rows =", len(rows), "schema =", [f.name for f in df.schema.fields])
 assert len(rows) > 0
 
-import duckdb, math, decimal, datetime as dt
-import numpy as np, pandas as pd
-con = duckdb.connect()
 SF = "/root/testdata/sf0.01"
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-
-def norm(v):
-    if v is None: return "N"
-    if isinstance(v,(list,tuple,np.ndarray)): return "["+",".join(norm(x) for x in v)+"]"
-    if isinstance(v,(bool,np.bool_)): return "T" if v else "F"
-    if isinstance(v,(int,np.integer)): return str(int(v))
-    if isinstance(v,decimal.Decimal): return repr(float(v))
-    if isinstance(v,(float,np.floating)):
-        f=float(v)
-        return "N" if math.isnan(f) else repr(f)
-    if isinstance(v,pd.Timestamp): return v.isoformat()
-    if isinstance(v,(dt.datetime,dt.date)): return v.isoformat()
-    return str(v)
+con = duck_con(SF)
 
 Q, O = E.queries(), E.oracle_sql()
 ok = fail = 0
@@ -42,9 +28,8 @@ for k in sorted(Q):
         print(f"  rows-only {k}: {n} rows"); ok += 1; continue
     sp = Q[k](spark, SF).toPandas()
     du = con.execute(O[k]).df()
-    s = sorted(tuple(norm(v) for v in r) for r in sp[sorted(sp.columns)].itertuples(index=False))
-    d = sorted(tuple(norm(v) for v in r) for r in du[sorted(du.columns)].itertuples(index=False))
-    status = "MATCH" if (s == d and sorted(sp.columns)==sorted(du.columns)) else "MISMATCH"
+    same = sorted(sp.columns) == sorted(du.columns) and canonical_rows(sp) == canonical_rows(du)
+    status = "MATCH" if same else "MISMATCH"
     if status=="MATCH": ok+=1
     else: fail+=1
     print(f"  {status} {k}: {len(sp)} rows")

@@ -228,35 +228,40 @@ def hashed_sets(df, col: str):
     Exactness: all callers feed BOTH intersect sides from arrays of
     this one relation's ``col``, so every element drawn during any
     ``array_intersect``/``size`` lives in V = the distinct elements of
-    ``col`` across ``df``. The guard computes |V| and |xxhash64(V)| in
-    one aggregate; equality proves xxhash64 restricted to V is a
-    bijection, under which ``|h(A) ∩ h(B)| = |A ∩ B|`` and
-    ``|distinct(h(A))| = |distinct(A)|`` for all A, B ⊆ V — every
-    downstream size, Jaccard, containment and threshold is value-
-    identical. On a collision (birthday bound ~|V|²/2⁶⁵ — expected
-    well under 1 for vocabularies to ~10⁸ distinct tokens) the helper
-    returns the original string arrays: same results, pre-r12 speed.
-    The guard itself is one linear token-stream aggregate with partial
-    (map-side) distinct — no driver data transfer beyond two counts.
+    ``col`` across ``df``. The guard groups V's tokens by
+    ``xxhash64`` and keeps each group's ``min`` and ``max`` token and
+    whether it holds a NULL; a group whose ``min`` differs from its
+    ``max`` holds two distinct tokens with one hash, so no such group
+    proves xxhash64 restricted to V is a bijection, under which
+    ``|h(A) ∩ h(B)| = |A ∩ B|`` and ``|distinct(h(A))| =
+    |distinct(A)|`` for all A, B ⊆ V — every downstream size,
+    Jaccard, containment and threshold is value-identical. On a
+    collision (birthday bound ~|V|²/2⁶⁵ — expected well under 1 for
+    vocabularies to ~10⁸ distinct tokens) the helper returns the
+    original string arrays: same results, pre-r12 speed. The guard is
+    one linear token-stream aggregate with partial (map-side)
+    min/max, a single shuffle, and an ``isEmpty`` probe that stops at
+    the first offending group — no driver data transfer beyond one
+    row at most.
 
-    NULL elements: ``countDistinct`` skips NULL but ``xxhash64(NULL)``
-    is a real value (the seed), so a NULL element adds one hash the
-    token count lacks and can offset a real collision in the equality
-    test. The same aggregate therefore also counts NULL elements, and
-    any NULL element keeps the string arrays. Precondition (holds at
-    every call site): both intersect operands derive from THIS df's
-    ``col``. NULL arrays (NULL text) explode to no rows and propagate
-    NULL through transform exactly as through the string path."""
-    probe = (
+    NULL elements: ``min``/``max`` skip NULL but ``xxhash64(NULL)`` is
+    a real value (the seed), so a NULL element could share its hash
+    with a real token unseen. Any group holding a NULL therefore also
+    keeps the string arrays. Precondition (holds at every call site):
+    both intersect operands derive from THIS df's ``col``. NULL arrays
+    (NULL text) explode to no rows and propagate NULL through
+    transform exactly as through the string path."""
+    clash = (
         df.select(F.explode(col).alias("_t"))
+        .groupBy(F.xxhash64("_t"))
         .agg(
-            F.countDistinct("_t").alias("d"),
-            F.countDistinct(F.xxhash64("_t")).alias("h"),
-            F.count(F.when(F.col("_t").isNull(), 1)).alias("n"),
+            F.min("_t").alias("lo"),
+            F.max("_t").alias("hi"),
+            F.max(F.isnull("_t")).alias("has_null"),
         )
-        .first()
+        .filter((F.col("lo") != F.col("hi")) | F.col("has_null"))
     )
-    if probe["d"] != probe["h"] or probe["n"]:  # collision or NULL: keep strings
+    if not clash.isEmpty():  # collision or NULL: keep strings
         return df
     return df.withColumn(
         col, F.transform(F.col(col), lambda x: F.xxhash64(x))

@@ -2582,7 +2582,8 @@ w AS (
                ((CAST(('0x' || substring(md5('bs' || CAST(r2.r AS VARCHAR) || ':'
                        || CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT)
                  % 1000000) + 0.5) / 1000001.0 AS u, r2.r
-        FROM orders CROSS JOIN (SELECT unnest(range(0, 10)) AS r) r2) o
+        FROM orders CROSS JOIN (SELECT unnest(range(0, 10)) AS r) r2
+        WHERE isfinite(o_totalprice)) o
   JOIN reps r ON r.r = o.r),
 means AS (
   SELECT r, CASE WHEN sum(wt) > 0 THEN sum(wt * y) / sum(wt) END AS m
@@ -2604,8 +2605,11 @@ def wl_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.7358 / 0.9197 / 0.9810 steps), so the whole inference is
     oracle-checkable; production swaps a per-run seed. Cost: one
     10×-explode scan + bounded aggregates — no shuffle carries raw
-    rows twice."""
-    o = load(spark, sf_dir, "orders")
+    rows twice. Non-finite and NULL totals are dropped on both
+    engines: one NaN or inf makes a replicate mean non-finite, and
+    DuckDB's ``stddev_samp`` then aborts (out of range) where Spark
+    returns NaN."""
+    o = load(spark, sf_dir, "orders").filter(finite("o_totalprice"))
     reps = spark.range(0, 10).select(F.col("id").cast("int").alias("r"))
     u = (
         (

@@ -292,17 +292,20 @@ GROUP BY l_returnflag
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet sink with hive partitioning (partitionBy → partition
-    pruning for downstream readers), verified by read-back aggregation."""
+    pruning for downstream readers), verified by read-back aggregation.
+    The read-back takes the schema just written, partition column
+    last as partition discovery would order it, so it starts no
+    footer-inference job."""
     out = _io_dir(sf_dir, "lineitem_sink")
-    (
-        load(spark, sf_dir, "lineitem")
-        .filter(F.col("l_quantity") > 30)
-        .write.mode("overwrite")
-        .partitionBy("l_returnflag")
-        .parquet(out)
+    rows = load(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 30)
+    rows.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    written = T.StructType(
+        [f for f in rows.schema if f.name != "l_returnflag"]
+        + [rows.schema["l_returnflag"]]
     )
     return (
-        spark.read.parquet(out)
+        spark.read.schema(written)
+        .parquet(out)
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -324,6 +327,8 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Trigger.AvailableNow into a parquet sink, then verify the
     final state against the batch oracle. This is the real streaming
     execution path (micro-batches, checkpointing), not a batch alias.
+    The read-back takes the stream's own schema, so it starts no
+    footer-inference job.
     """
     ensure_confs(spark)
     out = _io_dir(sf_dir, "events_streamed")
@@ -354,7 +359,8 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
         .awaitTermination()
     )
     return (
-        spark.read.parquet(out)
+        spark.read.schema(stream.schema)
+        .parquet(out)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),

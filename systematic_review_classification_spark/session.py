@@ -21,6 +21,19 @@ Config rationale (SURVEY.md §1.4, §6):
 * shuffle partitions sized to cores, AQE on — at bench scale (600k
   rows) 200 shuffle partitions is pure scheduling overhead; at cluster
   scale AQE coalesces/splits at runtime anyway.
+* ``spark.python.sql.dataFrameDebugging.enabled=false`` — PySpark wraps
+  every ``F.*`` function and Column method in an origin-capture
+  decorator that, per call, looks up the active session, reads a conf
+  and sets then clears the Python call site on the JVM: 6–9 extra py4j
+  round trips per call, two thirds of the round trips a query build
+  makes (a warm ``agg_pricing_summary`` build: 939 with capture on,
+  about 340 with it off). The cost is in error
+  messages: an analysis or runtime error no longer carries the
+  "DataFrame context" (the Python file:line that built the failing
+  expression). To get it back while debugging, build the session
+  yourself with this conf set to ``true`` before the engine is
+  imported; PySpark reads it once per process, at the first wrapped
+  call, so a driver-supplied session keeps whatever it chose.
 """
 
 from __future__ import annotations
@@ -58,6 +71,7 @@ def get_session(app_name: str = "systematic-review-classification-spark", cpus: 
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

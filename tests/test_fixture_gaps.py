@@ -333,6 +333,9 @@ def test_symmetric_series_forecast_negzero_parity(spark, synth_symmetric_events_
     DuckDB's accumulation order, +0.0 in Spark's). The shared rnd()
     helper must normalize the sign identically on both engines."""
     con = _con_for(synth_symmetric_events_dir, "events")
+    # One thread: DuckDB's parallel regr_slope combines partial states
+    # in an order that can round the slope to +0.0 instead of −0.0.
+    con.execute("SET threads=1")
     # precondition: without the + 0.0 normalizer the oracle's own
     # GROUP BY path still produces the signed zero this test freezes
     sgn = con.execute(

@@ -4,8 +4,8 @@
   so a NULL-key row must not feed the other rows' prefix min
   (``wl_pareto_frontier``'s NULL-price parts).
 * ``predicates.hashed_sets``: a NULL token hashes to a real value that
-  the distinct-token count does not see, so it must force the string
-  fallback.
+  the per-hash min/max tokens do not see, so it must force the string
+  fallback, as must a collision between two real tokens.
 """
 
 from __future__ import annotations
@@ -77,4 +77,12 @@ def test_null_token_cannot_mask_a_collision(spark, monkeypatch):
         lambda c: F.coalesce(F.length(c).cast("bigint"), F.lit(42).cast("bigint")),
     )
     df = spark.createDataFrame([(1, ["a", None]), (2, ["b"])], "id int, toks array<string>")
+    assert dict(hashed_sets(df, "toks").dtypes)["toks"] == "array<string>"
+
+
+def test_pure_collision_keeps_strings(spark, monkeypatch):
+    # A stand-in hash under which "a" and "b" collide, with no NULL
+    # token anywhere: only the collision itself can keep the strings.
+    monkeypatch.setattr(predicates.F, "xxhash64", lambda c: F.length(c).cast("bigint"))
+    df = spark.createDataFrame([(1, ["a", "cc"]), (2, ["b"])], "id int, toks array<string>")
     assert dict(hashed_sets(df, "toks").dtypes)["toks"] == "array<string>"

@@ -31,7 +31,9 @@ from systematic_review_classification_spark.functions.predicates import (
     finite_array,
     hashed_sets,
     jaccard_ge,
+    overlap_pairs,
 )
+from systematic_review_classification_spark.functions.shingles import bigram_shingles, has_bigram
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -427,48 +429,25 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles catch reordered-token near-dups that token-set Jaccard
     misses. Same integer-ratio arithmetic, same blocking discipline."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    grams = F.array_distinct(
-        F.filter(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-                lambda a, b: F.when(b.isNull(), None).otherwise(
-                    F.concat(a, F.lit("_"), b)
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        )
-    )
     # two bigram-less docs would make the union size 0 — an ANSI
     # divide-by-zero under the Jaccard ratio (test_property.py class)
-    g = d.select("doc_id", "source", grams.alias("grams")).filter(
-        F.size(F.col("grams")) > 0
+    g = d.filter(has_bigram("text")).select(
+        "doc_id", "source", bigram_shingles("text").alias("grams")
     )
-    # hashed_sets: shingle intersects on bigint arrays when the
-    # injectivity guard passes (functions/predicates.hashed_sets, r12)
-    g = hashed_sets(g, "grams")
-    a, b = g.alias("a"), g.alias("b")
-    pairs = a.join(
-        b,
+    # overlap_pairs: a hashed upper bound on |A∩B| filters the block
+    # pairs in the join, the string intersect verifies the few
+    # survivors (functions/predicates.overlap_pairs). 0.08 = 2/25 via
+    # jaccard_ge: the intersect size is referenced once
+    pairs = overlap_pairs(
+        g,
+        "grams",
         (F.col("a.source") == F.col("b.source")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
+        lambda nc, n1, n2: jaccard_ge(nc, n1 + n2, 2, 25),
         F.col("a.doc_id").alias("id1"),
         F.col("b.doc_id").alias("id2"),
-        # eval_once pins the intersect to ONE evaluation: without it
-        # the jaccard threshold filter pushes through this projection
-        # into the join residual and the intersect re-runs per candidate
-        # (see functions/predicates.eval_once; measured per key, r11)
-        eval_once(F.size(F.array_intersect("a.grams", "b.grams"))).alias("nc"),
-        F.size("a.grams").alias("n1"),
-        F.size("b.grams").alias("n2"),
     )
     jac = F.col("nc").cast("double") / (F.col("n1") + F.col("n2") - F.col("nc"))
-    # 0.08 = 2/25 via jaccard_ge — one array_intersect per candidate
-    # pair instead of two in the pushed join residual (r11)
-    return pairs.filter(
-        jaccard_ge(F.col("nc"), F.col("n1") + F.col("n2"), 2, 25)
-    ).select("id1", "id2", F.round(jac, 6).alias("jaccard"))
+    return pairs.select("id1", "id2", F.round(jac, 6).alias("jaccard"))
 
 
 @query(
@@ -1521,7 +1500,14 @@ def dedup_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.doc_id").alias("id1"),
         F.col("b.doc_id").alias("id2"),
-        F.when(F.levenshtein(F.col("a.text"), F.col("b.text"), 40) >= 0, 1)
+        # length bound first: levenshtein ≥ |length difference|, so a
+        # pair more than 40 characters apart cannot match and skips the
+        # banded edit distance (exact; texts are ASCII-only here)
+        F.when(
+            (F.abs(F.length("a.text") - F.length("b.text")) <= 40)
+            & (F.levenshtein(F.col("a.text"), F.col("b.text"), 40) >= 0),
+            1,
+        )
         .otherwise(0)
         .alias("is_match"),
         F.when(

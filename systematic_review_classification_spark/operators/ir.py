@@ -20,9 +20,10 @@ from systematic_review_classification_spark.functions.predicates import (
     clean_vec_sql,
     eval_once,
     finite_array,
-    hashed_sets,
+    overlap_pairs,
 )
 from systematic_review_classification_spark.functions.ranks import global_prefix_sum, global_rank
+from systematic_review_classification_spark.functions.shingles import bigram_shingles, has_bigram
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -179,48 +180,27 @@ def txt_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the block key becomes the MinHash band bucket exactly as in
     dedup_minhash_portable."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    grams = F.array_distinct(
-        F.filter(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-                lambda a, b: F.when(b.isNull(), None).otherwise(
-                    F.concat(a, F.lit("_"), b)
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        )
-    )
     # single-token docs have NO bigrams; they can neither contain nor be
     # contained, and an unguarded |A∩B|/|A| is an ANSI divide-by-zero
     # (found by tests/test_property.py fuzzing)
-    g = d.select("doc_id", "source", grams.alias("grams")).filter(
-        F.size(F.col("grams")) > 0
+    g = d.filter(has_bigram("text")).select(
+        "doc_id", "source", bigram_shingles("text").alias("grams")
     )
-    # hashed_sets: shingle intersects on bigint arrays when the
-    # injectivity guard passes (functions/predicates.hashed_sets, r12)
-    g = hashed_sets(g, "grams")
-    a, b = g.alias("a"), g.alias("b")
-    pairs = a.join(
-        b,
+    # overlap_pairs: a hashed upper bound on |A∩B| filters the block
+    # pairs in the join, the string intersect verifies the few
+    # survivors (functions/predicates.overlap_pairs). c >= 0.25 as
+    # 4·nc >= |A|: the same rational test without a division
+    pairs = overlap_pairs(
+        g,
+        "grams",
         (F.col("a.source") == F.col("b.source"))
         & (F.col("a.doc_id") != F.col("b.doc_id")),
-    ).select(
+        lambda nc, n1, n2: nc.cast("bigint") * 4 >= n1,
         F.col("a.doc_id").alias("id1"),
         F.col("b.doc_id").alias("id2"),
-        # NOT eval_once-barriered (unlike the dedup jaccard family):
-        # measured a wash at sf0.1 — few survivors, so the pushed
-        # residual's per-candidate intersect is the whole cost either
-        # way (r11)
-        (
-            F.size(F.array_intersect("a.grams", "b.grams")).cast("double")
-            / F.size("a.grams")
-        ).alias("c"),
     )
-    return pairs.filter(F.col("c") >= 0.25).select(
-        "id1", "id2", F.round("c", 6).alias("containment")
-    )
+    c = F.col("nc").cast("double") / F.col("n1")
+    return pairs.select("id1", "id2", F.round(c, 6).alias("containment"))
 
 
 @query(

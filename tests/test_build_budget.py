@@ -5,8 +5,9 @@ JVM-side call, and at the benchmark's scale those round trips are a
 large share of a query's wall time. These tests pin the per-key count
 of round trips for the benchmark's workload keys, that PySpark's
 per-call origin capture is off in sessions built by ``get_session``,
-and that a ``load`` memo hit reuses the memoized relation instead of
-going through ``SparkSession.read``.
+that a ``load`` memo hit reuses the memoized relation instead of
+going through ``SparkSession.read``, and that the shingle near-dup join
+starts no Spark job while it is built.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ BUILD_CALLS = {
     "wl_q14_promo": 104,
     "win_range_frame": 64,
     "src_stream_file": 102,
-    "txt_containment": 320,
+    "txt_containment": 224,
     "sink_parquet": 70,
 }
 BUDGET_SLACK = 1.25
@@ -69,6 +70,15 @@ def test_build_py4j_budget(spark, sf_dir, key):
     fn(spark, sf_dir)  # warm: every load below is a memo hit
     _, calls = _py4j_calls(spark, lambda: fn(spark, sf_dir))
     assert calls <= BUILD_CALLS[key] * BUDGET_SLACK, (key, calls)
+
+
+def test_txt_containment_builds_without_a_job(spark, sf_dir):
+    fn = all_queries()["txt_containment"]
+    fn(spark, sf_dir)  # warm: the documents load is a memo hit
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    fn(spark, sf_dir)
+    assert scheduler.numTotalJobs() == before
 
 
 def test_memo_hit_bypasses_the_reader(spark, tmp_path, monkeypatch):

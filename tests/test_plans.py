@@ -8,6 +8,8 @@ global top-k as TakeOrderedAndProject, whole-stage codegen engaged.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from systematic_review_classification_spark import all_queries
@@ -875,3 +877,20 @@ def test_eval_once_barrier_holds(spark, sf_dir):
     assert plan.count("levenshtein") == 1, plan
     plan = plan_of(QUERIES["dedup_near_jaccard"](spark, sf_dir))
     assert plan.count("array_intersect") == 1, plan
+
+
+@pytest.mark.parametrize("key", ["txt_containment", "dedup_ngram_jaccard"])
+def test_overlap_join_verifies_strings_above_the_join(spark, sf_dir, key):
+    """predicates.overlap_pairs: the join residual filters on the
+    hashed bound only (array_intersect over the bigint ``_ids``); the
+    string intersect over the shingles runs in a projection above the
+    join, on the survivors. Without the eval_once barrier Catalyst
+    pushes the exact threshold into the residual and the string
+    intersect runs for every candidate pair again."""
+    plan = plan_of(QUERIES[key](spark, sf_dir))
+    conds = re.findall(r"Join condition: (.*)", plan)
+    assert conds and all(
+        re.findall(r"array_intersect\((\w+)#", c) == ["_ids"] for c in conds
+    ), plan
+    projects = [n for n in plan.split("\n\n") if re.match(r"\(\d+\) Project", n)]
+    assert any("array_intersect(grams#" in n for n in projects), plan

@@ -2,7 +2,7 @@
 
 ``finite(c)`` — TRUE iff the double column holds a finite value
 (not NULL, not NaN, not ±Infinity). The NaN-world sweep
-(tests/test_nan_world.py) showed a single non-finite double aborts
+(``nan`` in tests/worlds.py) showed a single non-finite double aborts
 ANSI casts (``CAST(NaN AS INT)`` overflows on BOTH engines), blows
 DuckDB's stddev/var out of range, and silently corrupts quantile /
 rank / bucket assignments. Statistics and cast-bearing operators
@@ -111,7 +111,7 @@ def finite_array(c: Column | str) -> Column:
     *elements* inside an otherwise healthy array (a schema-drifted
     upstream) are the same class: ``forall`` requires each element
     non-NULL and finite. Mirror in oracle SQL with
-    :data:`CLEAN_VEC_SQL` on the same column."""
+    :func:`clean_vec_sql` on the same column."""
     col = F.col(c) if isinstance(c, str) else c
     return (
         col.isNotNull()

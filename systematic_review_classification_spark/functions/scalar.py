@@ -29,6 +29,15 @@ This module doubles as the Spark↔DuckDB dialect mapping table
   transform/filter           list_transform / list_filter
   aggregate(a, 0D, +)        list_reduce(a, +)   (0+x == x exactly)
   zip_with(a, b, f)          list_transform(list_zip(a,b), p -> f(p[1],p[2]))
+  vectors.dbl(v)             v::DOUBLE[]
+  vectors.total(v)           list_reduce(v, +)   (CASE arms for NULL / empty)
+  vectors.sqnorm / norm      [sqrt] list_reduce(list_transform(v, x -> x * x), +)
+  vectors.dot / sqdist       list_reduce(list_transform(list_zip(a, b), p -> ..), +)
+  seeded.md5_u32(*parts)     CAST('0x' || substring(md5(p1 || ..), 1, 8) AS BIGINT)
+  seeded.md5_uniform         (md5_u32 % 1000000 + 0.5) / 1000001.0
+  shingles.adjacent_pairs    list_filter(list_transform(list_zip(t, list_slice(t,
+    (t, f(a, b))               2, len(t))), p -> CASE WHEN p[2] IS NULL THEN NULL
+                               ELSE f(p[1], p[2]) END), g -> g IS NOT NULL)
   explode/posexplode         unnest(...) [+ zipped unnest(range(...))]
   get_json_object(j,'$.k')   j ->> '$.k'
   sha2(s, 256)               sha256(s)
@@ -41,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from systematic_review_classification_spark.functions.predicates import finite, rnd
+from systematic_review_classification_spark.functions.vectors import dbl, dot, norm
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -309,20 +319,13 @@ def fn_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact. DuckDB list_reduce RAISES on NULL/empty lists where
     Spark's aggregate returns NULL / the init value — the oracle's
     CASE arms mirror Spark's totals explicitly."""
-    e = load(spark, sf_dir, "embeddings")
-    emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    sq_sum = F.aggregate(
-        F.transform(emb, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )
-    dot_self = F.aggregate(
-        F.zip_with(emb, emb, lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-    )
+    e = load(spark, sf_dir, "embeddings").select("vec_id", dbl("embedding").alias("emb"))
     return e.select(
         "vec_id",
-        F.round(F.sqrt(sq_sum), 6).alias("l2_norm"),
-        F.size(F.filter(emb, lambda x: x > 0)).alias("n_pos"),
-        F.exists(emb, lambda x: F.abs(x) > 2.0).alias("has_big"),
-        F.round(dot_self, 6).alias("self_dot"),
+        F.round(norm("emb"), 6).alias("l2_norm"),
+        F.size(F.filter("emb", lambda x: x > 0)).alias("n_pos"),
+        F.exists("emb", lambda x: F.abs(x) > 2.0).alias("has_big"),
+        F.round(dot("emb", "emb"), 6).alias("self_dot"),
     )
 
 

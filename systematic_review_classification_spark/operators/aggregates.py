@@ -360,7 +360,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with pandas describe-level stats [PUB]; here distributed).
     Non-finite measures are filtered explicitly on both engines: one
     NaN/inf blows DuckDB's stddev out of range and poisons every
-    Spark moment with NaN (tests/test_nan_world.py). The covariance
+    Spark moment with NaN (``nan`` in tests/worlds.py). The covariance
     columns round through rnd()/+0.0: a CONSTANT column (the
     duplicate-flood world's 0.05 discount) makes the true covariance
     exactly 0, and DuckDB's sum-of-products residue rounds to −0.0

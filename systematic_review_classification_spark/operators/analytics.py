@@ -29,6 +29,7 @@ from systematic_review_classification_spark.functions.ranks import (
     global_rank,
 )
 from systematic_review_classification_spark.functions.predicates import finite, finite_bounded, rnd
+from systematic_review_classification_spark.functions.seeded import md5_uniform
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -2611,28 +2612,7 @@ def wl_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns NaN."""
     o = load(spark, sf_dir, "orders").filter(finite("o_totalprice"))
     reps = spark.range(0, 10).select(F.col("id").cast("int").alias("r"))
-    u = (
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("bs"),
-                            F.col("r").cast("string"),
-                            F.lit(":"),
-                            F.col("o_orderkey").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 1000000
-        )
-        + 0.5
-    ) / 1000001.0
+    u = md5_uniform("'bs'", "r", "':'", "o_orderkey")
     w = (
         o.crossJoin(F.broadcast(reps))
         .select(

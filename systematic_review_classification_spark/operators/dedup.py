@@ -34,6 +34,7 @@ from systematic_review_classification_spark.functions.predicates import (
     overlap_pairs,
 )
 from systematic_review_classification_spark.functions.shingles import bigram_shingles, has_bigram
+from systematic_review_classification_spark.functions.vectors import dbl, dot, norm
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -478,29 +479,25 @@ def dedup_embed_cos(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUE on DuckDB; mixed-dim pairs yield NULL cos_sim and fail the
     threshold identically on both."""
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding")).select(
-        "vec_id", "label", F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v")
+        "vec_id", "label", dbl("embedding").alias("v")
     )
     # per-vector norms computed BEFORE the join (per pair they would
     # re-reduce both arrays — the sim_cosine_topk lesson, 2× at sf0.1)
-    norm = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
     # zero-norm embeddings (padding / failed encodes) carry no
     # direction — excluded on both engines; ANSI division would abort
     a = e.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("id1"), F.col("label").alias("l1"),
-        F.col("v").alias("v1"), norm.alias("n1"),
+        F.col("v").alias("v1"), norm("v").alias("n1"),
     ).filter(F.col("n1") > 0)
     b = e.select(
         F.col("vec_id").alias("id2"), F.col("label").alias("l2"),
-        F.col("v").alias("v2"), norm.alias("n2"),
+        F.col("v").alias("v2"), norm("v").alias("n2"),
     ).filter(F.col("n2") > 0)
-    dot = F.aggregate(
-        F.zip_with("v1", "v2", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
     pairs = a.join(
         b, (F.col("l1") == F.col("l2")) & (F.col("id1") < F.col("id2"))
-    ).select("id1", "id2", F.round(dot / (F.col("n1") * F.col("n2")), 6).alias("cos_sim"))
+    ).select(
+        "id1", "id2", F.round(dot("v1", "v2") / (F.col("n1") * F.col("n2")), 6).alias("cos_sim")
+    )
     return pairs.filter(F.col("cos_sim") >= 0.3)
 
 
@@ -1123,22 +1120,16 @@ def dedup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     then two chained hash aggs. The pair join is bounded by block
     size; everything after it is linear in edges."""
     emb = load(spark, sf_dir, "embeddings").filter(finite_array("embedding"))
-    e = emb.select("vec_id", "label", F.col("embedding").cast("array<double>").alias("v"))
-    norm = F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    e = e.withColumn("nrm", norm).filter(F.col("nrm") > 0)
+    e = emb.select("vec_id", "label", dbl("embedding").alias("v"))
+    e = e.withColumn("nrm", norm("v")).filter(F.col("nrm") > 0)
     a, b = e.alias("a"), e.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pairs = (
         a.join(
             b,
             (F.col("a.label") == F.col("b.label"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .withColumn("cos_sim", F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
+        .withColumn("cos_sim", F.round(dot("a.v", "b.v") / (F.col("a.nrm") * F.col("b.nrm")), 6))
         .where(F.col("cos_sim") >= 0.2)
         .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"))
     )

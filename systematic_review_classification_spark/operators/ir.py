@@ -23,7 +23,13 @@ from systematic_review_classification_spark.functions.predicates import (
     overlap_pairs,
 )
 from systematic_review_classification_spark.functions.ranks import global_prefix_sum, global_rank
-from systematic_review_classification_spark.functions.shingles import bigram_shingles, has_bigram
+from systematic_review_classification_spark.functions.seeded import md5_u32
+from systematic_review_classification_spark.functions.shingles import (
+    adjacent_pairs,
+    bigram_shingles,
+    has_bigram,
+)
+from systematic_review_classification_spark.functions.vectors import dbl, dot, norm
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -323,30 +329,18 @@ def agg_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _bucket(col):
         return F.posexplode(
-            F.array(
-                *[
-                    (
-                        F.conv(
-                            F.substring(F.md5(F.concat(F.lit(f"{i}:"), col)), 1, 8),
-                            16,
-                            10,
-                        ).cast("bigint")
-                        % 32
-                    ).cast("int")
-                    for i in range(4)
-                ]
-            )
+            F.array(*[(md5_u32(f"'{i}:'", col) % 32).cast("int") for i in range(4)])
         )
 
     sketch = (
-        tok.select(_bucket(F.col("token")).alias("di", "bucket"))
+        tok.select(_bucket("token").alias("di", "bucket"))
         .groupBy("di", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
     keys = spark.createDataFrame(
         [("spark",), ("join",), ("stream",), ("zzz_absent",)], "key string"
     )
-    kb = keys.select("key", _bucket(F.col("key")).alias("di", "bucket"))
+    kb = keys.select("key", _bucket("key").alias("di", "bucket"))
     est = (
         kb.join(F.broadcast(sketch), ["di", "bucket"], "left")
         .groupBy("key")
@@ -478,15 +472,8 @@ def txt_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
     bg = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.zip_with(
-                F.col("t"),
-                F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(1))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("i", "p"),
-    ).filter(F.col("p.w2").isNotNull()).select("doc_id", "p.w1", "p.w2")
+        "doc_id", F.explode(adjacent_pairs("t", "named_struct('w1', a, 'w2', b)")).alias("p")
+    ).select("doc_id", "p.w1", "p.w2")
     uni = (
         d.select(F.explode(F.split("text", " ")).alias("w1"))
         .groupBy("w1")
@@ -550,15 +537,7 @@ def sim_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate score). The dense counterpart is sim_cosine_topk; this
     is the memory-sparse regime where vectors never materialize."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    grams = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNull(), None).otherwise(F.concat(a, F.lit("_"), b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    grams = adjacent_pairs("split(text, ' ')", "concat(a, '_', b)")
     tok = d.select("doc_id", F.explode(grams).alias("token"))
     # tf persisted: three consumers (df aggregate, n_docs, the scored
     # rows) whose pruned exchanges defeat ReuseExchange — the cache is
@@ -653,24 +632,10 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _bits(col):
-        return F.array(
-            *[
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"{i}#"), col.cast("string"))), 1, 8
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % 1024
-                ).cast("int")
-                for i in range(3)
-            ]
-        )
+        return F.array(*[(md5_u32(f"'{i}#'", col) % 1024).cast("int") for i in range(3)])
 
     bloom = (
-        dim.select(F.explode(_bits(F.col("k"))).alias("bit"))
+        dim.select(F.explode(_bits("k")).alias("bit"))
         .distinct()
         .agg(F.sort_array(F.collect_set("bit")).alias("bits"))
     )
@@ -680,7 +645,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         F.size(
             F.filter(
-                _bits(F.col("c_custkey")),
+                _bits("c_custkey"),
                 lambda b: F.array_contains(F.col("bits"), b),
             )
         ).alias("nhit"),
@@ -738,15 +703,7 @@ def txt_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wn"))
     )
-    cs = F.split(F.col("word"), "")
-    pairs = F.filter(
-        F.zip_with(
-            cs,
-            F.slice(cs, 2, F.greatest(F.size(cs) - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNull(), None).otherwise(F.concat(a, b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    pairs = adjacent_pairs("split(word, '')", "concat(a, b)")
     pr = wc.select(F.explode(pairs).alias("pair"), "wn")
     return (
         pr.groupBy("pair")
@@ -800,14 +757,7 @@ def wl_soft_dedup_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes.withColumnRenamed("fp", "_fp"),
         base["fp"].eqNullSafe(F.col("_fp")),
     ).select("doc_id", "source", "csize")
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("soft:"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
-    ) / 1000000.0
+    u = md5_u32("'soft:'", "doc_id") % 1000000 / 1000000.0
     coin = cl.select("source", "csize", u.alias("u"))
     return coin.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("docs_in"),
@@ -977,11 +927,7 @@ def wl_postings_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pl = tok.groupBy("token").agg(
         F.sort_array(F.collect_set("doc_id")).alias("p")
     )
-    deltas = F.zip_with(
-        F.slice(F.col("p"), 2, F.greatest(F.size("p") - 1, F.lit(1))),
-        F.slice(F.col("p"), 1, F.greatest(F.size("p") - 1, F.lit(1))),
-        lambda a, b: a - b,
-    )
+    deltas = adjacent_pairs("p", "b - a")
     # Deltas emitted comma-joined (the agg_string_agg convention): the
     # external harness canonicalizes via pandas sort/hash, which cannot
     # handle bare array cells — the varint-packable ints live on either
@@ -1038,15 +984,7 @@ def txt_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wn"))
     )
-    cs = F.split(F.col("word"), "")
-    pairs = F.filter(
-        F.zip_with(
-            cs,
-            F.slice(cs, 2, F.greatest(F.size(cs) - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNull(), None).otherwise(F.concat(a, b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    pairs = adjacent_pairs("split(word, '')", "concat(a, b)")
     rule = (
         wc.select(F.explode(pairs).alias("pair"), "wn")
         .groupBy("pair")
@@ -1160,17 +1098,13 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bare > 0 under NaN-is-greatest and ranks divergently; empty
     # arrays error DuckDB's list_reduce; dims must match the query's
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding")).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        "vec_id", dbl("embedding").alias("v")
     )
-    nn = F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
     # zero-norm vectors excluded on both engines (undefined cosine;
     # ANSI division would abort the job)
-    e = e.withColumn("nn", F.sqrt(nn)).filter(F.col("nn") > 0)
+    e = e.withColumn("nn", norm("v")).filter(F.col("nn") > 0)
     qv = e.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("q"), F.col("nn").alias("qn")
-    )
-    dot = F.aggregate(
-        F.zip_with("v", "q", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
     )
     es = (
         e.filter(F.col("vec_id") != 0)
@@ -1178,7 +1112,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("v") == F.size("q"))
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(dot / (F.col("nn") * F.col("qn")), 6).alias("cos"),
+            F.round(dot("v", "q") / (F.col("nn") * F.col("qn")), 6).alias("cos"),
         )
     )
     esr = global_rank(
@@ -1402,15 +1336,7 @@ def txt_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-bin aggregate joined back on the gram key — the shuffle
     carries gram fingerprints, and the bin axis stays bounded."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    grams = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNull(), None).otherwise(F.concat(a, F.lit("_"), b)),
-        ),
-        lambda x: x.isNotNull(),
-    )
+    grams = adjacent_pairs("split(text, ' ')", "concat(a, '_', b)")
     bg = d.select(
         F.expr("doc_id div 20").alias("bin"), F.explode(grams).alias("gram")
     )

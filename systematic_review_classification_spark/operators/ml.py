@@ -33,6 +33,8 @@ from systematic_review_classification_spark.functions.predicates import (
     finite_bounded,
     rnd,
 )
+from systematic_review_classification_spark.functions.seeded import md5_u32
+from systematic_review_classification_spark.functions.vectors import dbl, sqnorm, total
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -61,12 +63,9 @@ scored AS (
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding"))
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     return e.select(
-        "vec_id",
-        (F.col("label") >= 5).cast("int").alias("y"),
-        rnd(F.aggregate(v, F.lit(0.0), lambda a, x: a + x)).alias("score"),
-    )
+        "vec_id", (F.col("label") >= 5).cast("int").alias("y"), dbl("embedding").alias("v")
+    ).select("vec_id", "y", rnd(total("v")).alias("score"))
 
 
 # --- featurization for the MLlib paths ------------------------------------
@@ -700,9 +699,7 @@ def ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "vec_id",
-            array_to_vector(
-                F.transform(F.col("embedding"), lambda x: x.cast("double"))
-            ).alias("features"),
+            array_to_vector(dbl("embedding")).alias("features"),
         )
     )
     # MLlib KMeans ABORTS (ArrayIndexOutOfBounds in k-means|| init,
@@ -861,9 +858,7 @@ def ml_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "vec_id",
-            array_to_vector(
-                F.transform("embedding", lambda x: x.cast("double"))
-            ).alias("features"),
+            array_to_vector(dbl("embedding")).alias("features"),
         )
     )
     # the covariance of <2 rows is undefined — RowMatrix aborts on it
@@ -876,9 +871,7 @@ def ml_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.size("pc").alias("k"),
-            F.round(F.aggregate("pc", F.lit(0.0), lambda s, x: s + x * x), 4).alias(
-                "proj_sqnorm"
-            ),
+            F.round(sqnorm("pc"), 4).alias("proj_sqnorm"),
         )
     )
 
@@ -915,9 +908,7 @@ def ml_feature_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross_key = F.concat(
         F.col("c_mktsegment"), F.lit("x"), F.col("c_nationkey").cast("string")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(cross_key), 1, 8), 16, 10).cast("bigint") % 64
-    ).cast("int")
+    bucket = (md5_u32("c_mktsegment", "'x'", "c_nationkey") % 64).cast("int")
     return c.select(
         "c_custkey", cross_key.alias("cross_key"), bucket.alias("bucket")
     )
@@ -1324,7 +1315,7 @@ def ml_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid gaps are O(1), float noise is 1e-14 — no rounding before
     comparison, which would create boundary flips)."""
     e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        "vec_id", dbl("embedding").alias("v")
     )
     vd = e.select("vec_id", F.posexplode("v").alias("d", "x"))
     c = (
@@ -1697,16 +1688,7 @@ def ml_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.md5("text").alias("fp"),
-        F.when(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 10
-            < 8,
-            "train",
-        )
+        F.when(md5_u32("'split:'", "doc_id") % 10 < 8, "train")
         .otherwise("test")
         .alias("split"),
     )

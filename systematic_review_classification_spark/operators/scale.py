@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from systematic_review_classification_spark.functions.seeded import md5_uniform
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 from systematic_review_classification_spark.streaming.helpers import sf_tag
@@ -697,19 +698,7 @@ def sample_weighted_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     + TakeOrderedAndProject; ranking on the 12-dp-rounded key with id
     tie-break keeps both engines' cut identical."""
     o = load(spark, sf_dir, "orders")
-    u01 = (
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("es:"), F.col("o_orderkey").cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 1000000
-        )
-        + 0.5
-    ) / 1000001.0
+    u01 = md5_uniform("'es:'", "o_orderkey")
     # weight-0 rows have sampling probability 0 (their ES key is +inf):
     # filtered BEFORE the division on both engines — also the
     # DIVIDE_BY_ZERO guard for degenerate all-zero-price tables

@@ -22,22 +22,19 @@ from systematic_review_classification_spark.functions.predicates import (
     modal_dim_sql,
     rnd,
 )
+from systematic_review_classification_spark.functions.seeded import md5_u32
+from systematic_review_classification_spark.functions.vectors import (
+    dbl,
+    dot,
+    norm,
+    sqdist,
+    sqnorm,
+    total,
+)
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
 _INF = float("inf")
-
-
-def _dbl(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
 @query(
@@ -76,18 +73,18 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     undefined; zip padding would smuggle NULL similarities into the
     top-k). Ragged-vector world, round 9."""
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding")).select(
-        "vec_id", "label", _dbl(F.col("embedding")).alias("v")
+        "vec_id", "label", dbl("embedding").alias("v")
     )
     # norms are computed per VECTOR before the join, not per pair —
     # inside the join each pair would re-reduce both 64-dim arrays,
     # tripling the HOF work (measured 2× slower at sf0.1)
     probes = e.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("id1"), F.col("label").alias("l1"),
-        F.col("v").alias("v1"), _norm(F.col("v")).alias("n1"),
+        F.col("v").alias("v1"), norm("v").alias("n1"),
     ).filter(F.col("n1") > 0)
     cand = e.select(
         F.col("vec_id").alias("id2"), F.col("label").alias("l2"),
-        F.col("v").alias("v2"), _norm(F.col("v")).alias("n2"),
+        F.col("v").alias("v2"), norm("v").alias("n2"),
     ).filter(F.col("n2") > 0)
     pairs = probes.join(
         cand,
@@ -98,7 +95,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id1",
         "id2",
         F.round(
-            _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6
+            dot("v1", "v2") / (F.col("n1") * F.col("n2")), 6
         ).alias("cos_sim"),
     )
     w = W.partitionBy("id1").orderBy(F.col("cos_sim").desc(), "id2")
@@ -144,7 +141,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.select(
             "vec_id",
             array_to_vector(
-                F.when(ok, _dbl(F.col("embedding"))).otherwise(
+                F.when(ok, dbl("embedding")).otherwise(
                     F.array_repeat(F.lit(0.0), F.lit(int(modal)))
                 )
             ).alias("vec"),
@@ -179,7 +176,7 @@ def sim_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode → (label, pos) hash aggregate — elementwise mean without
     ever holding a vector per group in driver memory."""
     e = load(spark, sf_dir, "embeddings").select(
-        "label", F.posexplode(_dbl(F.col("embedding"))).alias("pos", "val")
+        "label", F.posexplode(dbl("embedding")).alias("pos", "val")
     )
     return e.groupBy("label", "pos").agg(F.round(F.avg("val"), 6).alias("centroid_val"))
 
@@ -215,10 +212,9 @@ def mm_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the init), its first element is NULL via try_element_at
     (plain element_at ABORTS under ANSI — ragged-vector world r9),
     and NaN/inf elements flow through IEEE semantics identically."""
-    e = load(spark, sf_dir, "embeddings")
-    v = _dbl(F.col("embedding"))
-    n = _norm(v)
-    first = F.try_element_at(v, F.lit(1))
+    e = load(spark, sf_dir, "embeddings").select("vec_id", dbl("embedding").alias("v"))
+    n = norm("v")
+    first = F.try_element_at("v", F.lit(1))
     # unit_first / comp_sum are zero-able derived doubles → rnd()'s
     # signed-zero snap (an all--0.0 vector folds to -0.0 under
     # DuckDB's init-less list_reduce but +0.0 under Spark's 0.0-init
@@ -228,7 +224,7 @@ def mm_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(n, 6).alias("l2"),
         rnd(first / F.nullif(n, F.lit(0.0))).alias("unit_first"),
         rnd(first * 2 + 1).alias("scaled_first"),
-        rnd(F.aggregate(v, F.lit(0.0), lambda s, x: s + x)).alias("comp_sum"),
+        rnd(total("v")).alias("comp_sum"),
     )
 
 
@@ -274,7 +270,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         load(spark, sf_dir, "embeddings")
         .filter(finite_array("embedding"))
-        .select("vec_id", _dbl(F.col("embedding")).alias("v"))
+        .select("vec_id", dbl("embedding").alias("v"))
         # a zero vector has no cosine direction, and its norm would
         # ANSI-abort the similarity division — same policy as
         # sim_cosine_topk
@@ -293,11 +289,11 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = cells.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("id1"), F.col("v").alias("v1"),
-        F.col("cell").alias("c1"), _norm(F.col("v")).alias("n1"),
+        F.col("cell").alias("c1"), norm("v").alias("n1"),
     )
     cand = cells.select(
         F.col("vec_id").alias("id2"), F.col("v").alias("v2"),
-        F.col("cell").alias("c2"), _norm(F.col("v")).alias("n2"),
+        F.col("cell").alias("c2"), norm("v").alias("n2"),
     )
     pairs = probes.join(
         cand, (F.col("c1") == F.col("c2")) & (F.col("id1") != F.col("id2"))
@@ -305,7 +301,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id1",
         "id2",
         F.round(
-            _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6
+            dot("v1", "v2") / (F.col("n1") * F.col("n2")), 6
         ).alias("cos_sim"),
     )
     w = W.partitionBy("id1").orderBy(F.col("cos_sim").desc(), "id2")
@@ -361,12 +357,12 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task whose block it lands in (ragged-vector world, round 9)
     e = dominant_dim_only(
         load(spark, sf_dir, "embeddings").filter(finite_array("embedding"))
-    ).select("vec_id", _dbl(F.col("embedding")).alias("v"))
+    ).select("vec_id", dbl("embedding").alias("v"))
     # zero-norm AND non-finite vectors out before the GEMM: numpy
     # would emit NaN rows (0/0, inf-inf) that rank nondeterministically
     # vs the oracle — note NaN > 0 is TRUE under both engines'
     # NaN-is-greatest comparison rule, so `> 0` alone keeps NaN norms
-    e = e.withColumn("_nn", _norm(F.col("v"))).filter(
+    e = e.withColumn("_nn", norm("v")).filter(
         (F.col("_nn") > 0) & finite("_nn")
     ).drop("_nn")
     probes = (
@@ -457,7 +453,7 @@ def mm_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         load(spark, sf_dir, "embeddings")
         .filter(finite_array("embedding"))
-        .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+        .select("vec_id", dbl("embedding").alias("v"))
     )
     mn, mx = F.array_min("v"), F.array_max("v")
     # Normalize BEFORE scaling: (x-mn)/(mx-mn) ∈ [0,1] cannot overflow
@@ -528,7 +524,7 @@ def sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the pairwise work, per-probe top-3 window. Swap the label
     block for an IVF cell (`sim_ivf_topk`) at 100 TB."""
     e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _dbl(F.col("embedding")).alias("v")
+        "vec_id", "label", dbl("embedding").alias("v")
     )
     mxabs = F.greatest(
         F.abs(F.array_min(F.col("v"))), F.abs(F.array_max(F.col("v")))
@@ -549,14 +545,10 @@ def sim_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id2"), F.col("label").alias("l2"),
         F.col("c").alias("c2"),
     )
-    qdot = F.aggregate(
-        F.zip_with(F.col("c1"), F.col("c2"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda s, x: s + x,
-    )
+    # |code| <= 127 over 64 dims: the double fold is exact
     pairs = probes.join(
         cand, (F.col("l1") == F.col("l2")) & (F.col("id1") != F.col("id2"))
-    ).select("id1", "id2", qdot.cast("bigint").alias("qdot"))
+    ).select("id1", "id2", dot("c1", "c2").cast("bigint").alias("qdot"))
     w = W.partitionBy("id1").orderBy(F.col("qdot").desc(), "id2")
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 3)
 
@@ -586,7 +578,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load(spark, sf_dir, "embeddings")
         .filter(finite_array("embedding"))  # PQ codebooks abort on NaN/Inf
-        .select("vec_id", _dbl(F.col("embedding")).alias("v"))
+        .select("vec_id", dbl("embedding").alias("v"))
     )
     # (vec_id, m, subvec[8]) — slice() is 1-indexed
     subs = emb.select(
@@ -653,13 +645,8 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), "m", F.col("sub").alias("qsub")
     )
     # per-query LUT: squared L2 from each query subvector to each centroid
-    sq = F.aggregate(
-        F.zip_with(F.col("qsub"), F.col("center"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
     lut = queries.join(F.broadcast(codebook), "m").select(
-        "qid", "m", "code", sq.alias("d2")
+        "qid", "m", "code", sqdist("qsub", "center").alias("d2")
     )
     scored = (
         codes.join(F.broadcast(lut), ["m", "code"])
@@ -709,7 +696,7 @@ def wl_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        dbl("embedding").alias("v"),
     )
     dims = (
         e.select("label", "half", F.posexplode("v").alias("i", "x"))
@@ -779,14 +766,9 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ranks divergently); query/candidate pairs join only across
     equal dimensions (ragged dot products are undefined)."""
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding")).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        "vec_id", "label", dbl("embedding").alias("v")
     )
-    nn = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    n = e.select("vec_id", "label", "v", nn.alias("nn")).filter(F.col("nn") > 0)
+    n = e.select("vec_id", "label", "v", norm("v").alias("nn")).filter(F.col("nn") > 0)
     q = n.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("true_label"),
@@ -799,9 +781,6 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("nn").alias("cn"),
     )
-    dot = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-    )
     sims = (
         c.crossJoin(F.broadcast(q))
         .filter(F.size("qv") == F.size("cv"))
@@ -810,7 +789,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "cid",
             "clabel",
-            F.round(dot / (F.col("qn") * F.col("cn")), 9).alias("sim"),
+            F.round(dot("qv", "cv") / (F.col("qn") * F.col("cn")), 9).alias("sim"),
         )
     )
     from pyspark.sql import Window as W
@@ -895,20 +874,7 @@ def sim_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id").cast("int").alias("i"))
         .crossJoin(spark.range(1, 65).select(F.col("id").cast("int").alias("d")))
     )
-    rv = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("d").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        .cast("double")
-        / 4294967296.0
-        - 0.5
-    )
+    rv = md5_u32("i", "':'", "d").cast("double") / 4294967296.0 - 0.5
     r = (
         dims.select("i", "d", rv.alias("rv"))
         .groupBy("i")
@@ -923,17 +889,10 @@ def sim_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buckets with every other degenerate row, and the verify's
     # cos = 0/0 ABORTS under ANSI; NaN/empty rows are corrupt input
     e = load(spark, sf_dir, "embeddings").filter(finite_array("embedding")).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        "vec_id", dbl("embedding").alias("v")
     )
-    e = (
-        e.withColumn("_nn0", _norm(F.col("v")))
-        .filter(F.col("_nn0") > 0)
-        .drop("_nn0")
-    )
-    pr = F.aggregate(
-        F.zip_with("v", "rvec", lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-    )
-    proj = e.crossJoin(F.broadcast(r)).select("vec_id", "i", pr.alias("pr"))
+    e = e.withColumn("nn", norm("v")).filter(F.col("nn") > 0)
+    proj = e.crossJoin(F.broadcast(r)).select("vec_id", "i", dot("v", "rvec").alias("pr"))
     sig = proj.groupBy(
         "vec_id", F.expr("i div 8").alias("band")
     ).agg(
@@ -954,27 +913,20 @@ def sim_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.vec_id").alias("id1"), F.col("b.vec_id").alias("id2"))
         .distinct()
     )
-    nn = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    ev = e.select("vec_id", "v", nn.alias("nn"))
-    dot = F.aggregate(
-        F.zip_with("v1", "v2", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
     out = (
         cand.join(
-            ev.select(
+            e.select(
                 F.col("vec_id").alias("id1"), F.col("v").alias("v1"), F.col("nn").alias("n1")
             ),
             "id1",
         )
         .join(
-            ev.select(
+            e.select(
                 F.col("vec_id").alias("id2"), F.col("v").alias("v2"), F.col("nn").alias("n2")
             ),
             "id2",
         )
-        .select("id1", "id2", (dot / (F.col("n1") * F.col("n2"))).alias("cos"))
+        .select("id1", "id2", (dot("v1", "v2") / (F.col("n1") * F.col("n2"))).alias("cos"))
     )
     return out.filter(F.col("cos") >= 0.3).select(
         "id1", "id2", F.round("cos", 6).alias("cos_sim")
@@ -1040,17 +992,8 @@ def sim_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum just SKIPS the missing positions)."""
     e = dominant_dim_only(
         load(spark, sf_dir, "embeddings").filter(finite_array("embedding"))
-    ).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    e = e.filter(
-        F.aggregate(
-            F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-        > 0
-    )
+    ).select("vec_id", "label", dbl("embedding").alias("v"))
+    e = e.filter(sqnorm("v") > 0)
     dims = e.select("label", F.posexplode("v").alias("i", "x"))
     cent = (
         dims.groupBy("label", "i")
@@ -1061,27 +1004,11 @@ def sim_semdedup_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.transform("s", lambda t: t.getField("c")).alias("cv"),
         )
-        .select(
-            "label",
-            "cv",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("cv", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-            ).alias("cnorm"),
-        )
+        .select("label", "cv", norm("cv").alias("cnorm"))
         .filter(F.col("cnorm") > 0)
     )
-    dot = F.aggregate(
-        F.zip_with("v", "cv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    vn = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
     scored = e.join(F.broadcast(cent), "label").select(
-        "label", (dot / (vn * F.col("cnorm"))).alias("cos")
+        "label", (dot("v", "cv") / (norm("v") * F.col("cnorm"))).alias("cos")
     )
     is_dup = F.when(F.col("cos") >= 0.25, 1).otherwise(0)
     return scored.groupBy("label").agg(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from systematic_review_classification_spark.functions.shingles import adjacent_pairs
+from systematic_review_classification_spark.functions.vectors import norm
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -117,15 +119,7 @@ def txt_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigrams via zip_with(tokens, shift(tokens)) — corpus bigram
     counts. The null-padded tail pair is filtered out."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    bigrams = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-        lambda g: ~g.rlike("^[^ ]*$"),  # drop null-padded tail (concat_ws skips nulls)
-    )
+    bigrams = adjacent_pairs("split(text, ' ')", "concat(a, ' ', b)")
     return (
         d.select("doc_id", F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
@@ -253,13 +247,10 @@ def txt_hashing_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tokens = RegexTokenizer(inputCol="text", outputCol="toks", pattern="\\s+").transform(d)
     tf = HashingTF(inputCol="toks", outputCol="tf_vec", numFeatures=1024).transform(tokens)
-    arr = vector_to_array("tf_vec")
-    return tf.select(
+    return tf.select("doc_id", vector_to_array("tf_vec").alias("arr")).select(
         "doc_id",
-        F.size(F.filter(arr, lambda x: x > 0)).alias("nnz"),
-        F.round(
-            F.sqrt(F.aggregate(arr, F.lit(0.0), lambda a, x: a + x * x)), 6
-        ).alias("vec_norm"),
+        F.size(F.filter("arr", lambda x: x > 0)).alias("nnz"),
+        F.round(norm("arr"), 6).alias("vec_norm"),
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from systematic_review_classification_spark.functions.ranks import global_rank
+from systematic_review_classification_spark.functions.shingles import adjacent_pairs
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -362,22 +363,18 @@ def txt_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator is embarrassingly parallel at any corpus size; docs
     too short for a window yield NULL (nullif guard), never a throw.
 
-    Bigrams pair the array with itself shifted by one (zip_with over
-    two slices) — no index sequence is ever built, so there is no
-    descending-sequence trap on 1-token docs (slice length clamps at
-    0). Trigrams use a guarded index transform (sequence() descends
-    when stop < start, hence the explicit CASE)."""
+    Bigrams pair the array with its own shift (``adjacent_pairs``) —
+    no index sequence is ever built, so there is no descending-sequence
+    trap on 1-token docs (they give no pairs). Trigrams use a guarded
+    index transform (sequence() descends when stop < start, hence the
+    explicit CASE)."""
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.col("text"), " ").alias("toks")
     )
     g = d.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n_tok"),
-        F.expr(
-            "zip_with(slice(toks, 1, size(toks) - 1),"
-            "         slice(toks, 2, size(toks) - 1),"
-            "         (a, b) -> concat(a, ' ', b))"
-        ).alias("g2"),
+        adjacent_pairs("toks", "concat(a, ' ', b)").alias("g2"),
         F.expr(
             "CASE WHEN size(toks) >= 3"
             "     THEN transform(sequence(0, size(toks) - 3),"
@@ -439,14 +436,7 @@ def txt_collocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, not the full bigram vocabulary."""
     d = load(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
-    bigrams = F.filter(
-        F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-        lambda g: ~g.rlike("^[^ ]*$"),
-    )
+    bigrams = adjacent_pairs("split(text, ' ')", "concat(a, ' ', b)")
     ucnt = (
         d.select(F.explode(toks).alias("tok"))
         .groupBy("tok")
@@ -923,19 +913,9 @@ def txt_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln/sum runs over the vocabulary-sized bigram table, not the
     corpus."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
     bg = d.select(
         F.explode(
-            F.filter(
-                F.zip_with(
-                    toks,
-                    F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(1))),
-                    lambda a, b: F.when(b.isNull(), None).otherwise(
-                        F.struct(a.alias("w1"), b.alias("w2"))
-                    ),
-                ),
-                lambda x: x.isNotNull(),
-            )
+            adjacent_pairs("split(text, ' ')", "named_struct('w1', a, 'w2', b)")
         ).alias("p")
     ).select("p.w1", "p.w2")
     c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("double").alias("n12"))

@@ -38,6 +38,7 @@ from systematic_review_classification_spark.functions.predicates import (
     money_round,
     rnd,
 )
+from systematic_review_classification_spark.functions.seeded import md5_uniform
 from systematic_review_classification_spark.registry import query
 from systematic_review_classification_spark.sources.tables import load
 
@@ -1364,17 +1365,7 @@ def wl_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny grouped relation."""
     ev = load(spark, sf_dir, "events")
     c = ev.groupBy("event_type").agg(F.count(F.lit(1)).cast("double").alias("n"))
-    u01 = (
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("dp:"), F.col("event_type"))), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 1000000
-        )
-        + 0.5
-    ) / 1000001.0
+    u01 = md5_uniform("'dp:'", "event_type")
     noise = (
         F.when(u01 >= 0.5, 1.0).otherwise(-1.0)
         * F.log(1.0 - 2.0 * F.abs(u01 - 0.5))

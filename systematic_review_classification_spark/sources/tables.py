@@ -96,7 +96,7 @@ _NS_MAGNITUDE_CUTOFF = 10**17
 # schema). At 100 TB the engine never owns its inputs: upstream
 # re-exports drift to narrower physical widths (pandas int64 → int32
 # when values fit, REAL instead of DOUBLE, smallint lengths). The
-# schema-drift world (tests/test_schemadrift_world.py, round 10)
+# schema-drift world (``schemadrift`` in tests/worlds.py, round 10)
 # showed width-sensitive code diverges or ABORTS on drifted parquet —
 # hll_sketch_agg rejects SMALLINT input outright, a float32 measure
 # makes round()/comparison semantics engine-dependent (DuckDB rounds

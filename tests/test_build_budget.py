@@ -3,11 +3,11 @@
 Building a query's DataFrame talks to the JVM over py4j once per
 JVM-side call, and at the benchmark's scale those round trips are a
 large share of a query's wall time. These tests pin the per-key count
-of round trips for the benchmark's workload keys, that PySpark's
-per-call origin capture is off in sessions built by ``get_session``,
-that a ``load`` memo hit reuses the memoized relation instead of
-going through ``SparkSession.read``, and that the shingle near-dup join
-starts no Spark job while it is built.
+of round trips for the benchmark's workload keys and the shared column
+helpers, that PySpark's per-call origin capture is off in sessions
+built by ``get_session``, that a ``load`` memo hit reuses the memoized
+relation instead of going through ``SparkSession.read``, and that the
+shingle near-dup join starts no Spark job while it is built.
 """
 
 from __future__ import annotations
@@ -24,7 +24,10 @@ from tests.test_load_memo import SF0001
 
 # py4j commands per warm build (every load a memo hit), measured with
 # pyspark 4.1.2; a key fails when it needs more than BUDGET_SLACK times
-# as many.
+# as many. The benchmark's workload keys, then one key per shared
+# column-helper family (functions/vectors.py, functions/seeded.py,
+# shingles.adjacent_pairs): a helper that slides back to a Python
+# lambda chain costs a py4j round trip per column node.
 BUILD_CALLS = {
     "agg_pricing_summary": 330,
     "wl_q3": 126,
@@ -33,6 +36,9 @@ BUILD_CALLS = {
     "src_stream_file": 102,
     "txt_containment": 224,
     "sink_parquet": 70,
+    "sim_cosine_topk": 234,
+    "wl_poisson_bootstrap": 160,
+    "txt_ngram": 61,
 }
 BUDGET_SLACK = 1.25
 

@@ -256,3 +256,132 @@ def test_chunking_short_document_boundaries(spark, tmp_path):
         by_doc.setdefault(r.doc_id, []).append(r)
     assert len(by_doc[1]) == 1 and by_doc[1][0].chunk == "x"
     assert len(by_doc[2]) == 1 and by_doc[2][0].n_tokens == 2
+
+
+# ---- shared column helpers vs plain Python --------------------------
+# functions/vectors.py, functions/seeded.py and shingles.adjacent_pairs
+# render SQL templates; each is checked here against a reference
+# written in Python, not against its own template.
+
+VECS = [
+    ([3.0, 4.0], [1.0, 2.0]),
+    ([], []),  # empty: the folds return their 0.0 start
+    (None, [1.0]),  # NULL array
+    ([1.0, 2.0, 3.0], [1.0, 2.0]),  # ragged: zip_with pads with NULL
+    ([2.0, None], [1.0, 1.0]),  # NULL element
+    ([-0.5, 0.25, 8.0], [0.5, -0.25, 1.0]),
+]
+
+
+def _py_fold(xs):
+    if xs is None or None in xs:
+        return None
+    s = 0.0
+    for x in xs:
+        s += x
+    return s
+
+
+def _py_zip(a, b, f):
+    if a is None or b is None or len(a) != len(b):
+        return None
+    return [None if x is None or y is None else f(x, y) for x, y in zip(a, b)]
+
+
+def _py_sq(a):
+    return None if a is None else [None if x is None else x * x for x in a]
+
+
+VECTOR_HELPERS = {
+    "total": (lambda V: V.total("a"), lambda a, b: _py_fold(a)),
+    "sqnorm": (lambda V: V.sqnorm("a"), lambda a, b: _py_fold(_py_sq(a))),
+    "norm": (
+        lambda V: V.norm("a"),
+        lambda a, b: None if _py_fold(_py_sq(a)) is None else _py_fold(_py_sq(a)) ** 0.5,
+    ),
+    "dot": (lambda V: V.dot("a", "b"), lambda a, b: _py_fold(_py_zip(a, b, lambda x, y: x * y))),
+    "sqdist": (
+        lambda V: V.sqdist("a", "b"),
+        lambda a, b: _py_fold(_py_zip(a, b, lambda x, y: (x - y) * (x - y))),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(VECTOR_HELPERS))
+def test_vector_helper_edges(spark, name):
+    from systematic_review_classification_spark.functions import vectors
+
+    build, want = VECTOR_HELPERS[name]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(VECS)],
+        "id int, a array<double>, b array<double>",
+    )
+    got = {r.id: r.v for r in df.select("id", build(vectors).alias("v")).collect()}
+    assert got == {i: want(a, b) for i, (a, b) in enumerate(VECS)}
+
+
+def test_dbl_widens_float_elements(spark):
+    import numpy as np
+
+    from systematic_review_classification_spark.functions.vectors import dbl
+
+    rows = [[0.1, -2.5], [], None, [1.0, None]]
+    df = spark.createDataFrame(list(enumerate(rows)), "id int, a array<float>")
+    got = {r.id: r.v for r in df.select("id", dbl("a").alias("v")).collect()}
+    assert got == {
+        i: None if a is None else [None if x is None else float(np.float32(x)) for x in a]
+        for i, a in enumerate(rows)
+    }
+    assert df.select(dbl("a")).schema.fields[0].dataType.simpleString() == "array<double>"
+
+
+SEEDED_PARTS = ["x", "", "中文", None, "a b"]
+
+
+def _py_u32(text):
+    import hashlib
+
+    return None if text is None else int(hashlib.md5(text.encode()).hexdigest()[:8], 16)
+
+
+@pytest.mark.parametrize("name", ["md5_u32", "md5_uniform"])
+def test_seeded_hash_edges(spark, name):
+    from systematic_review_classification_spark.functions import seeded
+
+    df = spark.createDataFrame(list(enumerate(SEEDED_PARTS)), "id int, s string")
+    # an int part is hashed through its decimal string form
+    col = getattr(seeded, name)("'bs'", "id", "':'", "s")
+    got = {r.id: r.v for r in df.select("id", col.alias("v")).collect()}
+    u32 = {i: _py_u32(None if s is None else f"bs{i}:{s}") for i, s in enumerate(SEEDED_PARTS)}
+    if name == "md5_u32":
+        assert got == u32
+    else:
+        assert got == {
+            i: None if u is None else (u % 1000000 + 0.5) / 1000001.0 for i, u in u32.items()
+        }
+        assert all(0.0 < v < 1.0 for v in got.values() if v is not None)
+
+
+PAIR_TEXTS = ["a b c", "one", None, "a  b", "", "x y x y"]
+
+
+@pytest.mark.parametrize(
+    "combine,py",
+    [
+        ("concat(a, '_', b)", lambda a, b: f"{a}_{b}"),
+        ("concat(a, b)", lambda a, b: a + b),
+        ("named_struct('w1', a, 'w2', b)", lambda a, b: (a, b)),
+    ],
+    ids=["sep", "concat", "struct"],
+)
+def test_adjacent_pairs_edges(spark, combine, py):
+    from systematic_review_classification_spark.functions.shingles import adjacent_pairs
+
+    df = spark.createDataFrame(list(enumerate(PAIR_TEXTS)), "id int, s string")
+    col = adjacent_pairs("split(s, ' ')", combine)
+    got = {r.id: r.v for r in df.select("id", col.alias("v")).collect()}
+    want = {}
+    for i, s in enumerate(PAIR_TEXTS):
+        t = None if s is None else s.split(" ")
+        want[i] = None if t is None else [py(a, b) for a, b in zip(t, t[1:])]
+    assert got == want  # a struct Row compares equal to its tuple

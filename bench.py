@@ -65,6 +65,31 @@ def main() -> None:
     for k in keys:
         queries[k](spark, sf_dir).count()
 
+    def passes(label, action, runs, cold=False):
+        """Time ``runs`` passes over keys, each run of key k described
+        as ``{label}:{k}``; a cold pass clears the SQL cache before
+        each key. Returns key -> seconds per pass."""
+        samples: dict[str, list[float]] = {k: [] for k in keys}
+        for _ in range(runs):
+            for k in keys:
+                if cold:
+                    spark.catalog.clearCache()
+                spark.sparkContext.setJobDescription(f"{label}:{k}")
+                t0 = time.perf_counter()
+                action(queries[k](spark, sf_dir))
+                samples[k].append(time.perf_counter() - t0)
+        spark.sparkContext.setJobDescription(None)
+        return samples
+
+    def count(df):
+        df.count()
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    def median(samples):
+        return {k: round(sorted(v)[len(v) // 2], 4) for k, v in samples.items()}
+
     # Cold pass (r11 verdict item 1): the warm-cache convention lets a
     # .persist() INSIDE a query (txt_tfidf_topk's tf, wl_pagerank3's
     # edges) be pre-built by the untimed warm-up — all warm runs then
@@ -73,30 +98,15 @@ def main() -> None:
     # one run, so the cold column includes every cache build the query
     # performs. JIT/codegen are already warm from the pass above, so
     # cold-vs-warm isolates exactly the in-query cache work.
-    cold_times: dict[str, float] = {}
-    for k in keys:
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"bench-cold:{k}")
-        t0 = time.perf_counter()
-        queries[k](spark, sf_dir).count()
-        cold_times[k] = round(time.perf_counter() - t0, 4)
-    spark.sparkContext.setJobDescription(None)
+    cold_times = median(passes("bench-cold", count, 1, cold=True))
 
     # median-of-3 per query (r4 verdict): a warm single shot carries
     # GC / scheduler jitter at the ~0.3-0.6 s floor; the median is the
     # headline number, the min rides along so real plan regressions
     # are distinguishable from session drift.
     runs = 3
-    samples: dict[str, list[float]] = {k: [] for k in keys}
-    for _ in range(runs):
-        for k in keys:
-            spark.sparkContext.setJobDescription(f"bench:{k}")
-            t0 = time.perf_counter()
-            queries[k](spark, sf_dir).count()
-            samples[k].append(time.perf_counter() - t0)
-    spark.sparkContext.setJobDescription(None)
-
-    times = {k: round(sorted(v)[runs // 2], 4) for k, v in samples.items()}
+    samples = passes("bench", count, runs)
+    times = median(samples)
     mins = {k: round(min(v), 4) for k, v in samples.items()}
 
     # Noop-sink timings ride along as a SEPARATE field (r11, guide
@@ -111,30 +121,8 @@ def main() -> None:
     # compute number (queries_noop) is also measured warm-cache, so a
     # query whose real work hides behind both count-pruning AND a
     # persist needs this column to be visible at all.
-    noop_cold_times: dict[str, float] = {}
-    for k in keys:
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"bench-noop-cold:{k}")
-        t0 = time.perf_counter()
-        queries[k](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        noop_cold_times[k] = round(time.perf_counter() - t0, 4)
-    spark.sparkContext.setJobDescription(None)
-
-    noop_samples: dict[str, list[float]] = {k: [] for k in keys}
-    for _ in range(runs):
-        for k in keys:
-            spark.sparkContext.setJobDescription(f"bench-noop:{k}")
-            t0 = time.perf_counter()
-            queries[k](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            noop_samples[k].append(time.perf_counter() - t0)
-    spark.sparkContext.setJobDescription(None)
-    noop_times = {
-        k: round(sorted(v)[runs // 2], 4) for k, v in noop_samples.items()
-    }
+    noop_cold_times = median(passes("bench-noop-cold", noop, 1, cold=True))
+    noop_times = median(passes("bench-noop", noop, runs))
 
     # Host state in the JSON line itself (r10 verdict item 3): rounds
     # 6-10 showed a same-code 9 s ↔ 17 s swing that follows the host's

@@ -147,6 +147,18 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity")
 
 
+def _views(spark: SparkSession, sf_dir: str, suffix: str, *tables: str) -> dict[str, str]:
+    """Register ``load``'s relation of each table as the temp view
+    ``{table}_{suffix}`` and return {table: view name}: SQL text over
+    these views shares ``load``'s memo and drift repairs, where a
+    ``parquet.`path``` read would infer every footer again on each
+    build (``sql_params`` does the same for one table)."""
+    names = {t: f"{t}_{suffix}" for t in tables}
+    for t, name in names.items():
+        load(spark, sf_dir, t).createOrReplaceTempView(name)
+    return names
+
+
 _SUBQUERY_SQL_BODY = """
 SELECT c_custkey, c_acctbal,
        (SELECT count(*) FROM {orders} o
@@ -173,14 +185,8 @@ def sql_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst de-correlates all of them into joins — the identical SQL
     text runs on both engines, so this also proves dialect-portable
     query text survives the frontend."""
-    from systematic_review_classification_spark.session import ensure_confs
-
-    ensure_confs(spark)
     return spark.sql(
-        _SUBQUERY_SQL_BODY.format(
-            orders=f"parquet.`{sf_dir}/orders.parquet`",
-            customer=f"parquet.`{sf_dir}/customer.parquet`",
-        )
+        _SUBQUERY_SQL_BODY.format(**_views(spark, sf_dir, "sq", "orders", "customer"))
     )
 
 
@@ -216,13 +222,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_components' label propagation behaves. Integer division uses
     each dialect's operator (Spark ``div``, DuckDB ``//``) — the only
     non-portable token in an otherwise identical query text."""
-    from systematic_review_classification_spark.session import ensure_confs
-
-    ensure_confs(spark)
     return spark.sql(
-        _RECURSIVE_SQL.format(
-            customer=f"parquet.`{sf_dir}/customer.parquet`", intdiv="div"
-        )
+        _RECURSIVE_SQL.format(intdiv="div", **_views(spark, sf_dir, "rc", "customer"))
     )
 
 
@@ -252,14 +253,8 @@ def sql_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant: one shuffle on the correlation key. Identical SQL text
     runs on both engines — DuckDB 1.0+ and Spark 3.2+ both speak
     LATERAL."""
-    from systematic_review_classification_spark.session import ensure_confs
-
-    ensure_confs(spark)
     return spark.sql(
-        _LATERAL_SQL_BODY.format(
-            orders=f"parquet.`{sf_dir}/orders.parquet`",
-            customer=f"parquet.`{sf_dir}/customer.parquet`",
-        )
+        _LATERAL_SQL_BODY.format(**_views(spark, sf_dir, "lat", "orders", "customer"))
     )
 
 

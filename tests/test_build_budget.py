@@ -7,7 +7,8 @@ of round trips for the benchmark's workload keys and the shared column
 helpers, that PySpark's per-call origin capture is off in sessions
 built by ``get_session``, that a ``load`` memo hit reuses the memoized
 relation instead of going through ``SparkSession.read``, and that the
-shingle near-dup join starts no Spark job while it is built.
+shingle near-dup join and the SQL-text keys start no Spark job while
+they are built.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.errors.utils import is_debugging_enabled
 
 from systematic_review_classification_spark import all_queries
 from systematic_review_classification_spark.sources.tables import load
+from tests.harness import py4j_calls
 from tests.test_load_memo import SF0001
 
 # py4j commands per warm build (every load a memo hit), measured with
@@ -43,28 +45,6 @@ BUILD_CALLS = {
 BUDGET_SLACK = 1.25
 
 
-def _py4j_calls(spark, fn):
-    """Run ``fn`` and return its result with the number of py4j
-    commands it sent, not counting the ones that release Python's
-    references to JVM objects: those follow garbage collection, not
-    the code under test."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent = []
-
-    def counting(command, *args, **kwargs):
-        if not command.startswith("m\nd\n"):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
-    client.send_command = counting
-    try:
-        out = fn()
-    finally:
-        del client.send_command  # the class method again
-    return out, len(sent)
-
-
 def test_origin_capture_is_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert is_debugging_enabled() is False
@@ -74,13 +54,21 @@ def test_origin_capture_is_off(spark):
 def test_build_py4j_budget(spark, sf_dir, key):
     fn = all_queries()[key]
     fn(spark, sf_dir)  # warm: every load below is a memo hit
-    _, calls = _py4j_calls(spark, lambda: fn(spark, sf_dir))
+    _, calls = py4j_calls(spark, lambda: fn(spark, sf_dir))
     assert calls <= BUILD_CALLS[key] * BUDGET_SLACK, (key, calls)
 
 
-def test_txt_containment_builds_without_a_job(spark, sf_dir):
-    fn = all_queries()["txt_containment"]
-    fn(spark, sf_dir)  # warm: the documents load is a memo hit
+# keys whose warm build must start no Spark job: the shingle near-dup
+# join, and the SQL-text keys that read their tables through ``load``
+# temp views instead of ``parquet.`path``` (one footer-inference job
+# per table reference on every build)
+JOB_FREE = ["txt_containment", "sql_subqueries", "sql_lateral", "sql_recursive_cte"]
+
+
+@pytest.mark.parametrize("key", JOB_FREE)
+def test_build_starts_no_job(spark, sf_dir, key):
+    fn = all_queries()[key]
+    fn(spark, sf_dir)  # warm: every load below is a memo hit
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     before = scheduler.numTotalJobs()
     fn(spark, sf_dir)

@@ -22,17 +22,15 @@ from __future__ import annotations
 
 import pytest
 
+from tests.harness import write_tables
+
 
 def _chain_world(spark, tmp_path, n_docs: int) -> str:
-    d = str(tmp_path / f"chain{n_docs}")
     rows = []
     for i in range(1, n_docs + 1):
         text = " ".join(f"w{j:03d}" for j in range(i, i + 5))
         rows.append((i, text, "en", "chain", len(text)))
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).write.parquet(f"{d}/documents.parquet")
-    return d
+    return write_tables(spark, tmp_path / f"chain{n_docs}", {"documents": rows})
 
 
 def test_diameter_9_chain_trips_the_convergence_guard(spark, tmp_path):

@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import types as T
 
 from systematic_review_classification_spark import all_oracles, all_queries
+from tests.harness import plan_of
 
 # Keys allowed to keep an unpartitioned window: must be a window over
 # a PROVABLY BOUNDED relation (a reduced aggregate whose cardinality
@@ -117,10 +118,7 @@ def surfaces(spark, sf_dir):
     out = {}
     for key, fn in all_queries().items():
         df = fn(spark, sf_dir)
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out[key] = (df.schema, plan)
+        out[key] = (df.schema, plan_of(df))
     return out
 
 
@@ -160,11 +158,6 @@ def test_unpartitioned_window_canary(spark, sf_dir):
     from pyspark.sql import Window, functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    def plan_of(df):
-        return spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
     bad_ordered = li.withColumn(
         "rn", F.row_number().over(Window.orderBy("l_extendedprice"))
     )

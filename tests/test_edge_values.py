@@ -11,6 +11,9 @@ import duckdb
 import pandas as pd
 import pytest
 
+from systematic_review_classification_spark import all_queries
+from tests.harness import write_tables
+
 EDGE_STRINGS = [
     "",
     " ",
@@ -143,6 +146,14 @@ def test_boundary_timestamps(spark):
     assert got == want
 
 
+# the documents columns in the order these tests write them
+_DOC_COLS = ["doc_id", "text", "n_chars", "source", "lang"]
+
+
+def _write_docs(spark, root, rows, **more):
+    write_tables(spark, root, {"documents": rows, **more}, cols={"documents": _DOC_COLS})
+
+
 def test_frame_sample_short_document(spark, tmp_path):
     """A document under 16 chars has zero frames: sequence upper bound
     is clamped so the query must return no rows for it instead of
@@ -150,16 +161,49 @@ def test_frame_sample_short_document(spark, tmp_path):
     short docs even though the shipped fixture does not)."""
     from systematic_review_classification_spark.operators.multimodal import mm_frame_sample
 
-    docs = spark.createDataFrame(
-        [(1, "tiny", 4, "s", "en"), (2, "x" * 40, 40, "s", "en")],
-        "doc_id long, text string, n_chars long, source string, lang string",
-    )
-    docs.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    _write_docs(spark, tmp_path, [(1, "tiny", 4, "s", "en"), (2, "x" * 40, 40, "s", "en")])
     rows = sorted(
         (r.doc_id, r.frame_idx)
         for r in mm_frame_sample(spark, str(tmp_path)).collect()
     )
     assert rows == [(2, 0)]
+
+
+EMPTY_CORPUS_KEYS = [
+    "txt_normalize", "txt_tokenize", "txt_stopwords", "txt_ngram",
+    "txt_tf", "txt_df_idf", "txt_langid", "txt_quality_score",
+    "txt_token_count_bpe", "txt_fingerprint",
+    "dedup_exact", "dedup_near_jaccard", "dedup_simhash",
+    "dedup_simhash64", "dedup_simhash_band", "dedup_ngram_jaccard",
+    "dedup_minhash_portable", "dedup_embed_cos",
+    "mm_binary_meta", "mm_decode_stub", "mm_frame_sample",
+    "sim_cosine_topk", "sim_centroid", "mm_vector_norm",
+    "ml_eval_confusion", "ml_eval_auc", "ml_label_index", "ml_split",
+    "dedup_components", "txt_pii_scrub", "wl_clean_corpus",
+    "txt_chunk", "txt_chunk_tokens", "txt_sentence_split",
+    "dedup_paragraph", "ml_calibration", "sim_bruteforce_topk",
+    "dedup_minhash_canonical", "txt_repetition", "wl_dataset_card",
+    "mm_embed_quantize",
+    "txt_collocation", "txt_zipf", "txt_stem", "sim_topk_int8",
+    "wl_mix_entropy",
+    "dedup_incremental", "dedup_cluster_hist", "dedup_degree_hist",
+    "fn_collate",
+    "txt_bm25_topk", "wl_inverted_index", "txt_containment",
+    "dedup_biblio", "agg_cms_portable", "dedup_fellegi_sunter", "wl_hygiene_attribution",
+    "wl_eb_shrinkage", "wl_capture_recapture", "dedup_threshold_sweep",
+    "wl_vocab_growth", "txt_sentiment_lexicon", "wl_kl_source_mix", "txt_conditional_entropy",
+    "txt_burstiness", "txt_chao1_richness", "txt_distinctive_terms", "txt_heaps_fit",
+    "txt_logodds_shift",
+    "txt_bigram_lm_score", "wl_embedding_drift", "dedup_minhash_eval",
+    "sim_sparse_cosine", "ml_knn_classify", "txt_bpe_pair_counts",
+    "wl_pretrain_pipeline", "sim_rp_lsh", "txt_ocr_artifact_filter",
+    "ml_logreg_gd", "ml_nb_portable", "dedup_exact_substring",
+    "ml_kmeans_portable", "wl_prisma_flow", "wl_cohens_kappa",
+    "ml_feature_mi", "ml_screen_e2e", "ml_split_leakage", "ml_gains_table",
+    "ml_cascade_cost", "txt_script_mix",
+    "txt_boilerplate_strip", "wl_soft_dedup_sampling", "wl_retrieval_eval",
+    "wl_temperature_mix", "sim_semdedup_centroid", "txt_oov_curve",
+]
 
 
 def test_document_operators_survive_empty_corpus(spark, tmp_path):
@@ -168,56 +212,9 @@ def test_document_operators_survive_empty_corpus(spark, tmp_path):
     empty filter results constantly; ANSI mode turns latent indexing
     and sequence assumptions into runtime errors only a test like this
     catches."""
-    from systematic_review_classification_spark import all_queries
-
-    docs_schema = "doc_id long, text string, n_chars long, source string, lang string"
-    emb_schema = (
-        "vec_id long, embedding array<float>, label int"
-    )
-    spark.createDataFrame([], docs_schema).write.mode("overwrite").parquet(
-        f"{tmp_path}/documents.parquet"
-    )
-    spark.createDataFrame([], emb_schema).write.mode("overwrite").parquet(
-        f"{tmp_path}/embeddings.parquet"
-    )
-    keys = [
-        "txt_normalize", "txt_tokenize", "txt_stopwords", "txt_ngram",
-        "txt_tf", "txt_df_idf", "txt_langid", "txt_quality_score",
-        "txt_token_count_bpe", "txt_fingerprint",
-        "dedup_exact", "dedup_near_jaccard", "dedup_simhash",
-        "dedup_simhash64", "dedup_simhash_band", "dedup_ngram_jaccard",
-        "dedup_minhash_portable", "dedup_embed_cos",
-        "mm_binary_meta", "mm_decode_stub", "mm_frame_sample",
-        "sim_cosine_topk", "sim_centroid", "mm_vector_norm",
-        "ml_eval_confusion", "ml_eval_auc", "ml_label_index", "ml_split",
-        "dedup_components", "txt_pii_scrub", "wl_clean_corpus",
-        "dedup_minhash_portable",
-        "txt_chunk", "txt_chunk_tokens", "txt_sentence_split",
-        "dedup_paragraph", "ml_calibration", "sim_bruteforce_topk",
-        "dedup_minhash_canonical", "txt_repetition", "wl_dataset_card",
-        "mm_embed_quantize",
-        "txt_collocation", "txt_zipf", "txt_stem", "sim_topk_int8",
-        "wl_mix_entropy",
-        "dedup_incremental", "dedup_cluster_hist", "dedup_degree_hist",
-        "fn_collate",
-        "txt_bm25_topk", "wl_inverted_index", "txt_containment",
-        "dedup_biblio", "agg_cms_portable", "dedup_fellegi_sunter", "wl_hygiene_attribution",
-        "wl_eb_shrinkage", "wl_capture_recapture", "dedup_threshold_sweep",
-        "wl_vocab_growth", "txt_sentiment_lexicon", "wl_kl_source_mix", "txt_conditional_entropy",
-        "txt_burstiness", "txt_chao1_richness", "txt_distinctive_terms", "txt_heaps_fit",
-        "txt_logodds_shift",
-        "txt_bigram_lm_score", "wl_embedding_drift", "dedup_minhash_eval",
-        "sim_sparse_cosine", "ml_knn_classify", "txt_bpe_pair_counts",
-        "wl_pretrain_pipeline", "sim_rp_lsh", "txt_ocr_artifact_filter",
-        "ml_logreg_gd", "ml_nb_portable", "dedup_exact_substring",
-        "ml_kmeans_portable", "wl_prisma_flow", "wl_cohens_kappa",
-        "ml_feature_mi", "ml_screen_e2e", "ml_split_leakage", "ml_gains_table",
-        "ml_cascade_cost", "txt_script_mix",
-        "txt_boilerplate_strip", "wl_soft_dedup_sampling", "wl_retrieval_eval",
-        "wl_temperature_mix", "sim_semdedup_centroid", "txt_oov_curve",
-    ]
+    _write_docs(spark, tmp_path, [], embeddings=[])
     q = all_queries()
-    for key in keys:
+    for key in EMPTY_CORPUS_KEYS:
         n = q[key](spark, str(tmp_path)).count()
         assert n >= 0  # ran without throwing; row count is key-specific
 
@@ -228,18 +225,12 @@ def test_chunking_short_document_boundaries(spark, tmp_path):
     shorter-than-overlap texts, where a naive sequence upper bound of
     n_chars - overlap would go negative and throw (the
     mm_frame_sample bug class, ADVICE r1)."""
-    from systematic_review_classification_spark import all_queries
-
-    rows = [
+    _write_docs(spark, tmp_path, [
         (1, "x", 1, "s", "en"),
         (2, "ab cd", 5, "s", "en"),
         (3, "y" * 56, 56, "s", "en"),   # == char overlap
         (4, "z" * 257, 257, "s", "en"),  # one char past a window
-    ]
-    schema = "doc_id long, text string, n_chars long, source string, lang string"
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        f"{tmp_path}/documents.parquet"
-    )
+    ])
     q = all_queries()
     chunks = {
         r.doc_id: r for r in q["txt_chunk"](spark, str(tmp_path)).collect()

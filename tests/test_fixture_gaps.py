@@ -9,14 +9,17 @@ the adversarial input.
 
 from __future__ import annotations
 
-import duckdb
+import datetime as dt
+
 import pytest
 
 from systematic_review_classification_spark import all_oracles, all_queries
-from tests.harness import compare
+from tests.harness import check_keys, compare, duck_con, write_tables
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
+# the events columns without props, as the series fixtures write them
+_NO_PROPS = {"events": ["event_id", "ts", "user_id", "event_type", "value"]}
 
 
 @pytest.fixture(scope="module")
@@ -34,15 +37,7 @@ def synth_events_dir(spark, tmp_path_factory):
             )
         eid += 1
         rows.append((eid, "2024-01-09 00:00:00", user, "purchase", 9.9, "{}"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type VARCHAR, value DOUBLE, props VARCHAR)"
-    )
-    con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?, ?)", rows)
-    con.execute(f"COPY ev TO '{d}/events.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, d, {"events": rows}, "file")
 
 
 @pytest.fixture(scope="module")
@@ -59,34 +54,12 @@ def synth_long_docs_dir(spark, tmp_path_factory):
             toks[300:360] = [f"shared{j}" for j in range(60)]
         text = " ".join(toks)
         docs.append((doc_id, f"src{doc_id % 2}", "en", text, len(text)))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE doc (doc_id BIGINT, source VARCHAR, lang VARCHAR, "
-        "text VARCHAR, n_chars BIGINT)"
-    )
-    con.executemany("INSERT INTO doc VALUES (?, ?, ?, ?, ?)", docs)
-    con.execute(f"COPY doc TO '{d}/documents.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
-
-
-def _con_for(sf_dir: str, table: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
-    )
-    return con
+    return write_tables(spark, d, {"documents": docs}, "file",
+                        cols={"documents": ["doc_id", "source", "lang", "text", "n_chars"]})
 
 
 def test_multitouch_two_touch_parity(spark, synth_events_dir):
-    con = _con_for(synth_events_dir, "events")
-    compare(
-        QUERIES["wl_multitouch_attribution"](spark, synth_events_dir),
-        con,
-        ORACLES["wl_multitouch_attribution"],
-        key="wl_multitouch_attribution@2touch",
-    )
-    con.close()
+    assert not check_keys(spark, synth_events_dir, ["wl_multitouch_attribution"])
 
 
 def test_multitouch_two_touch_conserved(spark, synth_events_dir):
@@ -112,14 +85,7 @@ def test_long_doc_oracle_parity(spark, synth_long_docs_dir, key):
     """Token-position spines must be data-derived on both engines: a
     400-token corpus with shared spans at positions 300+ still
     hash-matches."""
-    con = _con_for(synth_long_docs_dir, "documents")
-    compare(
-        QUERIES[key](spark, synth_long_docs_dir),
-        con,
-        ORACLES[key],
-        key=f"{key}@long",
-    )
-    con.close()
+    assert not check_keys(spark, synth_long_docs_dir, [key])
 
 
 def test_long_doc_substring_finds_deep_span(spark, synth_long_docs_dir):
@@ -139,8 +105,6 @@ def synth_zero_vec_dir(spark, tmp_path_factory):
     never does. Under ANSI mode an unguarded norm division aborts the
     whole job."""
     d = tmp_path_factory.mktemp("synth_vecs")
-    import duckdb as _duck
-
     rows = []
     for vid in range(8):
         if vid == 3:
@@ -151,12 +115,7 @@ def synth_zero_vec_dir(spark, tmp_path_factory):
         else:
             vec = [float(((vid + i) % 5) - 2) for i in range(64)]
         rows.append((vid, vec, vid % 2))
-    con = _duck.connect()
-    con.execute("CREATE TABLE e (vec_id BIGINT, embedding FLOAT[], label INTEGER)")
-    con.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
-    con.execute(f"COPY e TO '{d}/embeddings.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, d, {"embeddings": rows}, "file")
 
 
 @pytest.mark.parametrize(
@@ -178,14 +137,7 @@ def test_zero_norm_vectors_survive(spark, synth_zero_vec_dir, key):
     """Every cosine-family operator must neither crash (ANSI
     DIVIDE_BY_ZERO) nor diverge from its oracle when zero-norm /
     cancelling vectors are present."""
-    con = _con_for(synth_zero_vec_dir, "embeddings")
-    compare(
-        QUERIES[key](spark, synth_zero_vec_dir),
-        con,
-        ORACLES[key],
-        key=f"{key}@zerovec",
-    )
-    con.close()
+    assert not check_keys(spark, synth_zero_vec_dir, [key])
 
 
 @pytest.fixture(scope="module")
@@ -196,23 +148,13 @@ def synth_constant_events_dir(spark, tmp_path_factory):
     (ACF's sum-of-squares, z-scores, trend slopes) must return NULL /
     empty here, not abort the job with ANSI DIVIDE_BY_ZERO
     (wl_autocorrelation did, analytics.py — fixed r5)."""
-    import datetime as dt
-
     d = tmp_path_factory.mktemp("synth_const_events")
     base = dt.datetime(2024, 3, 1)
     rows = [
         (i, (base + dt.timedelta(days=i)).isoformat(sep=" "), 1, "click", 1.0)
         for i in range(4)
     ]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type VARCHAR, value DOUBLE)"
-    )
-    con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?)", rows)
-    con.execute(f"COPY ev TO '{d}/events.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, d, {"events": rows}, "file", cols=_NO_PROPS)
 
 
 @pytest.mark.parametrize(
@@ -239,14 +181,7 @@ def test_constant_daily_series_survives(spark, synth_constant_events_dir, key):
     """Zero-variance daily series: every spread-dividing time-series
     statistic must match its oracle (typically NULL columns or zero
     rows) instead of raising DIVIDE_BY_ZERO."""
-    con = _con_for(synth_constant_events_dir, "events")
-    compare(
-        QUERIES[key](spark, synth_constant_events_dir),
-        con,
-        ORACLES[key],
-        key=f"{key}@constseries",
-    )
-    con.close()
+    assert not check_keys(spark, synth_constant_events_dir, [key])
 
 
 @pytest.fixture(scope="module")
@@ -259,8 +194,6 @@ def synth_flat_adjusted_events_dir(spark, tmp_path_factory):
     reach that flat series through division, so the cancellation
     Σy²−(Σy)²/n lands at exact 0.0 on Spark and a ~1e-16 residue on
     DuckDB (NULL vs 0.0 adj_z before the relative-ε fix)."""
-    import datetime as dt
-
     d = tmp_path_factory.mktemp("synth_flatadj_events")
     base = dt.datetime(2024, 3, 4)  # Monday; 4 distinct weekdays
     rows, eid = [], 0
@@ -271,15 +204,7 @@ def synth_flat_adjusted_events_dir(spark, tmp_path_factory):
                 (eid, (base + dt.timedelta(days=day)).isoformat(sep=" "),
                  1, "click", 1.0)
             )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type VARCHAR, value DOUBLE)"
-    )
-    con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?)", rows)
-    con.execute(f"COPY ev TO '{d}/events.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, d, {"events": rows}, "file", cols=_NO_PROPS)
 
 
 def test_flat_adjusted_series_zscore_parity(spark, synth_flat_adjusted_events_dir):
@@ -287,14 +212,7 @@ def test_flat_adjusted_series_zscore_parity(spark, synth_flat_adjusted_events_di
     engine keeps a cancellation residue): adj_z must be NULL on both
     engines via the shared relative-ε flatness test, never NULL on
     one and 0.0 on the other."""
-    con = _con_for(synth_flat_adjusted_events_dir, "events")
-    compare(
-        QUERIES["wl_anomaly_deseasonalized"](spark, synth_flat_adjusted_events_dir),
-        con,
-        ORACLES["wl_anomaly_deseasonalized"],
-        key="wl_anomaly_deseasonalized@flatadjusted",
-    )
-    con.close()
+    assert not check_keys(spark, synth_flat_adjusted_events_dir, ["wl_anomaly_deseasonalized"])
 
 
 @pytest.fixture(scope="module")
@@ -305,8 +223,6 @@ def synth_symmetric_events_dir(spark, tmp_path_factory):
     through the oracle's own GROUP BY path over the written parquet)
     while Spark's lands on +0.0, and round() preserves the sign. Every derived column must
     pass through the shared rnd()/+0.0 normalizer."""
-    import datetime as dt
-
     d = tmp_path_factory.mktemp("synth_sym_events")
     base = dt.datetime(2024, 5, 1)
     rows, eid = [], 0
@@ -317,22 +233,14 @@ def synth_symmetric_events_dir(spark, tmp_path_factory):
                 (eid, (base + dt.timedelta(days=day)).isoformat(sep=" "),
                  1, "click", 1.0)
             )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type VARCHAR, value DOUBLE)"
-    )
-    con.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?)", rows)
-    con.execute(f"COPY ev TO '{d}/events.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, d, {"events": rows}, "file", cols=_NO_PROPS)
 
 
 def test_symmetric_series_forecast_negzero_parity(spark, synth_symmetric_events_dir):
     """Zero-slope daily series: slope rounds to signed zero (−0.0 in
     DuckDB's accumulation order, +0.0 in Spark's). The shared rnd()
     helper must normalize the sign identically on both engines."""
-    con = _con_for(synth_symmetric_events_dir, "events")
+    con = duck_con(synth_symmetric_events_dir)
     # One thread: DuckDB's parallel regr_slope combines partial states
     # in an order that can round the slope to +0.0 instead of −0.0.
     con.execute("SET threads=1")
@@ -363,21 +271,15 @@ def synth_dblmax_span_vec_dir(spark, tmp_path_factory):
     stores FLOAT32, whose ±3.4e38 span stays finite in double — only
     a drifted double column reaches this branch, which is why the
     overflow world's 1e150 single-sign values never did.)"""
-    d = tmp_path_factory.mktemp("synth_dblmax_vecs")
-    import duckdb as _duck
-
     rows = [
         (0, [float(i % 5) - 2.0 for i in range(8)], 0),     # healthy
         (1, [-1.0e308, 1.0e308] + [0.0] * 6, 1),            # inf span
         (2, [1.0e308, 1.2e308] + [1.0e308] * 6, 0),         # finite huge span
         (3, [-1.0e308] * 8, 1),                             # mx = mn escape
     ]
-    con = _duck.connect()
-    con.execute("CREATE TABLE e (vec_id BIGINT, embedding DOUBLE[], label INTEGER)")
-    con.executemany("INSERT INTO e VALUES (?, ?, ?)", rows)
-    con.execute(f"COPY e TO '{d}/embeddings.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, tmp_path_factory.mktemp("synth_dblmax_vecs"),
+                        {"embeddings": rows}, "file",
+                        retype={"embeddings": {"embedding": "array<double>"}})
 
 
 def test_quantize_survives_dblmax_span(spark, synth_dblmax_span_vec_dir):
@@ -385,19 +287,12 @@ def test_quantize_survives_dblmax_span(spark, synth_dblmax_span_vec_dir):
     qsum NULL (corrupt scale, not a crash), the finite-huge-span row
     quantizes via the overflow-free (x−mn)/(mx−mn)·255 order, and the
     flat row takes the mx = mn escape — identically on both engines."""
-    con = _con_for(synth_dblmax_span_vec_dir, "embeddings")
-    compare(
-        QUERIES["mm_embed_quantize"](spark, synth_dblmax_span_vec_dir),
-        con,
-        ORACLES["mm_embed_quantize"],
-        key="mm_embed_quantize@dblmaxspan",
-    )
+    assert not check_keys(spark, synth_dblmax_span_vec_dir, ["mm_embed_quantize"])
     out = {
         r.vec_id: r.qsum
         for r in QUERIES["mm_embed_quantize"](spark, synth_dblmax_span_vec_dir).collect()
     }
     assert out[1] is None and out[3] == 0 and out[2] is not None
-    con.close()
 
 
 @pytest.fixture(scope="module")
@@ -407,9 +302,6 @@ def synth_dirty_cast_lineitem_dir(spark, tmp_path_factory):
     double→int cast truncates, DuckDB's rounds), decimal-token and
     control-padded returnflag strings (Spark's string parser trims
     exactly ASCII x00-x20 and accepts integral tokens only)."""
-    d = tmp_path_factory.mktemp("synth_dirty_cast")
-    import duckdb as _duck
-
     rows = [
         (1, 1, 1, 1, 10.5, 1000.0, 0.05, 0.02, "N", "O", "1997-03-02"),
         (2, 2, 2, 2, -3.7, 2000.0, 0.10, 0.04, "3.7", "F", "1997-04-02"),
@@ -418,17 +310,8 @@ def synth_dirty_cast_lineitem_dir(spark, tmp_path_factory):
         (5, 5, 5, 6, 1e15, 5000.0, 0.02, 0.00, "+5", "F", "1997-07-02"),
         (6, 6, 6, 7, 2.5e9, 6000.0, 0.03, 0.00, " 7 ", "O", "1997-08-02"),
     ]
-    con = _duck.connect()
-    con.execute(
-        "CREATE TABLE li (l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT,"
-        " l_linenumber INTEGER, l_quantity DOUBLE, l_extendedprice DOUBLE,"
-        " l_discount DOUBLE, l_tax DOUBLE, l_returnflag VARCHAR,"
-        " l_linestatus VARCHAR, l_shipdate TIMESTAMP)"
-    )
-    con.executemany("INSERT INTO li VALUES (?,?,?,?,?,?,?,?,?,?,?)", rows)
-    con.execute(f"COPY li TO '{d}/lineitem.parquet' (FORMAT PARQUET)")
-    con.close()
-    return str(d)
+    return write_tables(spark, tmp_path_factory.mktemp("synth_dirty_cast"),
+                        {"lineitem": rows}, "file")
 
 
 def test_try_cast_family_survives_dirty_inputs(spark, synth_dirty_cast_lineitem_dir):
@@ -437,13 +320,7 @@ def test_try_cast_family_survives_dirty_inputs(spark, synth_dirty_cast_lineitem_
     (2.5e9 → NULL), and string tokens Spark's trimAll accepts
     ('\\t8\\t' → 8, '\\x00 14' → 14, '+5' → 5) or rejects ('3.7' →
     NULL where a bare DuckDB TRY_CAST would round to 4)."""
-    con = _con_for(synth_dirty_cast_lineitem_dir, "lineitem")
-    compare(
-        QUERIES["fn_try"](spark, synth_dirty_cast_lineitem_dir),
-        con,
-        ORACLES["fn_try"],
-        key="fn_try@dirtycast",
-    )
+    assert not check_keys(spark, synth_dirty_cast_lineitem_dir, ["fn_try"])
     out = {
         r.l_orderkey: (r.flag_int, r.qty_int)
         for r in QUERIES["fn_try"](spark, synth_dirty_cast_lineitem_dir).collect()
@@ -454,4 +331,3 @@ def test_try_cast_family_survives_dirty_inputs(spark, synth_dirty_cast_lineitem_
     assert out[4] == (14, 0)
     assert out[5] == (5, None)
     assert out[6] == (7, None)
-    con.close()

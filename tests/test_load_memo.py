@@ -13,7 +13,6 @@ import os
 import shutil
 import subprocess
 import sys
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -21,24 +20,10 @@ import pytest
 
 from systematic_review_classification_spark.sources import tables
 from systematic_review_classification_spark.sources.tables import load
+from tests.harness import jobs_during
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF0001 = os.path.join(REPO, "perfbench", "data", "sf0.001")
-
-
-def _jobs_during(spark, fn):
-    """Run ``fn`` and return its result with the number of Spark jobs
-    it started, read from the status tracker."""
-    sc = spark.sparkContext
-    group = f"load-memo-{uuid.uuid4().hex}"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _region(keys, key_type=pa.int32(), **extra):
@@ -54,8 +39,8 @@ def _region(keys, key_type=pa.int32(), **extra):
 def test_hit_starts_no_job(spark, tmp_path, name):
     shutil.copy(f"{SF0001}/{name}.parquet", tmp_path / f"{name}.parquet")
     d = str(tmp_path)
-    first, miss_jobs = _jobs_during(spark, lambda: load(spark, d, name))
-    second, hit_jobs = _jobs_during(spark, lambda: load(spark, d, name))
+    first, miss_jobs = jobs_during(spark, lambda: load(spark, d, name))
+    second, hit_jobs = jobs_during(spark, lambda: load(spark, d, name))
     assert (miss_jobs, hit_jobs) == (1, 0)
     assert second.dtypes == first.dtypes
     assert sorted(second.collect()) == sorted(first.collect())
@@ -79,10 +64,10 @@ def test_added_part_file_invalidates(spark, tmp_path):
     d, parts = str(tmp_path), tmp_path / "region.parquet"
     parts.mkdir()
     pq.write_table(_region([0, 1]), parts / "part-0.parquet")
-    assert _jobs_during(spark, lambda: load(spark, d, "region").count())[0] == 2
-    assert _jobs_during(spark, lambda: load(spark, d, "region"))[1] == 0
+    assert jobs_during(spark, lambda: load(spark, d, "region").count())[0] == 2
+    assert jobs_during(spark, lambda: load(spark, d, "region"))[1] == 0
     pq.write_table(_region([2, 3]), parts / "part-1.parquet")
-    df, jobs = _jobs_during(spark, lambda: load(spark, d, "region"))
+    df, jobs = jobs_during(spark, lambda: load(spark, d, "region"))
     assert jobs == 1
     assert df.count() == 4
 
@@ -101,13 +86,14 @@ _AFTER_STOP = """
 import sys
 from systematic_review_classification_spark.session import get_session
 from systematic_review_classification_spark.sources.tables import load
-from tests.test_load_memo import _jobs_during
+from tests.harness import jobs_during
+from tests.harness import jobs_during
 
 jobs = []
 for _ in range(2):
     spark = get_session(cpus=1)
     for _ in range(2):
-        jobs.append(_jobs_during(spark, lambda: load(spark, sys.argv[1], "nation"))[1])
+        jobs.append(jobs_during(spark, lambda: load(spark, sys.argv[1], "nation"))[1])
     spark.stop()
 print(jobs)
 """
@@ -132,7 +118,7 @@ def test_new_session_after_stop_misses(tmp_path):
 def test_unstatable_path_bypasses_memo(spark, tmp_path):
     shutil.copy(f"{SF0001}/nation.parquet", tmp_path / "nation.parquet")
     d = f"file://{tmp_path}"  # readable by Spark, not by os.stat
-    jobs = [_jobs_during(spark, lambda: load(spark, d, "nation"))[1] for _ in range(2)]
+    jobs = [jobs_during(spark, lambda: load(spark, d, "nation"))[1] for _ in range(2)]
     assert jobs == [1, 1]
     assert f"{d}/nation.parquet" not in tables._MEMO[spark]
 
@@ -144,6 +130,6 @@ def test_self_join_keys_match_oracle_on_memo_hits(spark, sf_dir, duck, key):
 
     fn, oracle = all_queries()[key], all_oracles()[key]
     compare(fn(spark, sf_dir), duck, oracle, key)
-    df, build_jobs = _jobs_during(spark, lambda: fn(spark, sf_dir))
+    df, build_jobs = jobs_during(spark, lambda: fn(spark, sf_dir))
     assert build_jobs == 0  # every load was a memo hit
     compare(df, duck, oracle, key)

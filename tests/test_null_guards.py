@@ -10,9 +10,6 @@
 
 from __future__ import annotations
 
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from systematic_review_classification_spark.functions import predicates
@@ -20,7 +17,7 @@ from systematic_review_classification_spark.functions.ranks import (
     global_prefix_min_excl,
 )
 from systematic_review_classification_spark.functions.predicates import hashed_sets
-from tests.harness import compare
+from tests.harness import check_keys, write_tables
 
 
 def test_prefix_min_skips_null_order_keys(spark):
@@ -34,28 +31,19 @@ def test_prefix_min_skips_null_order_keys(spark):
 
 
 def test_pareto_frontier_null_price_and_null_size(spark, tmp_path):
-    from systematic_review_classification_spark import all_oracles, all_queries
+    from systematic_review_classification_spark import all_queries
 
     # part 3: NULL price, a size below every other; part 4: the
     # converse. Neither dominates nor is dominated; part 5 is
     # dominated by part 2.
-    pq.write_table(
-        pa.table({
-            "p_partkey": pa.array([1, 2, 3, 4, 5], pa.int64()),
-            "p_brand": ["A", "B", "C", "D", "E"],
-            "p_retailprice": pa.array([10.0, 20.0, None, 15.0, 25.0]),
-            "p_size": pa.array([5, 3, 1, None, 4], pa.int32()),
-        }),
-        tmp_path / "part.parquet",
-    )
+    d = write_tables(spark, tmp_path, {"part": [
+        (1, "A", 10.0, 5), (2, "B", 20.0, 3), (3, "C", None, 1), (4, "D", 15.0, None),
+        (5, "E", 25.0, 4),
+    ]}, "file", cols={"part": ["p_partkey", "p_brand", "p_retailprice", "p_size"]})
     key = "wl_pareto_frontier"
-    df = all_queries()[key](spark, str(tmp_path))
+    df = all_queries()[key](spark, d)
     assert sorted(r.p_partkey for r in df.collect()) == [1, 2, 3, 4]
-    with duckdb.connect() as con:
-        con.execute(
-            f"CREATE VIEW part AS SELECT * FROM read_parquet('{tmp_path}/part.parquet')"
-        )
-        compare(df, con, all_oracles()[key], key)
+    assert not check_keys(spark, d, [key])
 
 
 def test_hashed_sets_keeps_strings_when_a_token_is_null(spark):

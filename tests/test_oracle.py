@@ -14,14 +14,13 @@ from tests.harness import compare
 QUERIES = all_queries()
 ORACLES = all_oracles()
 
-# ---- fast tier (r12, r11 verdict item 2) --------------------------
+# ---- fast tier ----------------------------------------------------
 # The driver's default gate runs a curated oracle sample instead of
-# the full 446-key sweep (which, with the 19 world sweeps, pushed the
-# suite past the driver's verification window — VERIFY_r11
-# tests_ok:false was a timeout at 9%, not a failure). The sample =
-# every bench headline key (bench.HEADLINE) + _TOUCHED (the keys whose
-# plan changed in r12, and an oracled key for each shared column
-# helper in functions/vectors.py, functions/seeded.py and
+# the full 446-key sweep, which with the world sweeps takes far longer
+# than the driver's verification window. The sample = every bench
+# headline key (bench.HEADLINE) + _TOUCHED (keys whose plans changed
+# in recent rounds, and an oracled key for each shared column helper
+# in functions/vectors.py, functions/seeded.py and
 # shingles.adjacent_pairs; sqdist's only operator, sim_pq_adc, is
 # rows-only) + a deterministic every-9th spread across the sorted
 # registry, so each operator module keeps differential coverage in the

@@ -11,15 +11,12 @@ call returns against a brute-force join on the exact count.
 
 from __future__ import annotations
 
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from systematic_review_classification_spark.functions import predicates
 from systematic_review_classification_spark.functions.predicates import overlap_pairs
-from tests.harness import compare
+from tests.harness import check_keys, write_tables
 
 KEYS = ("txt_containment", "dedup_ngram_jaccard")
 
@@ -51,32 +48,17 @@ def _length_hash(c):
 
 
 @pytest.fixture(scope="module")
-def docs_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("overlap_docs")
-    ids, texts, sources = zip(*DOCS)
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array(ids, pa.int64()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(["en"] * len(DOCS), pa.string()),
-            "source": pa.array(sources, pa.string()),
-            "n_chars": pa.array([len(t or "") for t in texts], pa.int64()),
-        }),
-        d / "documents.parquet",
-    )
-    return str(d)
+def docs_dir(spark, tmp_path_factory):
+    rows = [(i, text, "en", source, len(text or "")) for i, text, source in DOCS]
+    return write_tables(spark, tmp_path_factory.mktemp("overlap_docs"), {"documents": rows},
+                        "file")
 
 
 def _check_key(spark, docs_dir, key):
-    from systematic_review_classification_spark import all_oracles, all_queries
+    from systematic_review_classification_spark import all_queries
 
-    df = all_queries()[key](spark, docs_dir)
-    with duckdb.connect() as con:
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs_dir}/documents.parquet')"
-        )
-        compare(df, con, all_oracles()[key], key)
-    return {(r.id1, r.id2) for r in df.collect()}
+    assert not check_keys(spark, docs_dir, [key])
+    return {(r.id1, r.id2) for r in all_queries()[key](spark, docs_dir).collect()}
 
 
 @pytest.mark.parametrize("key", KEYS)

@@ -28,6 +28,7 @@ with rows.
 from __future__ import annotations
 
 from systematic_review_classification_spark import all_oracles, all_queries
+from tests.harness import plan_of
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -118,16 +119,10 @@ NONEQUI_OK = {
 ROW_PYTHON_OK = {"udf_python", "udtf_python"}
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_registry_nonequi_and_row_python_lint(spark, sf_dir):
     bad: list[tuple[str, str]] = []
     for key, fn in QUERIES.items():
-        s = _plan(fn(spark, sf_dir))
+        s = plan_of(fn(spark, sf_dir))
         nonequi = ("CartesianProduct" in s) or ("BroadcastNestedLoopJoin" in s)
         if nonequi and key not in NONEQUI_OK:
             bad.append((key, "unvetted non-equi join (Cartesian/BNLJ)"))

@@ -13,12 +13,9 @@ import re
 import pytest
 
 from systematic_review_classification_spark import all_queries
+from tests.harness import plan_of
 
 QUERIES = all_queries()
-
-
-def plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def test_scan_pushdown_and_pruning(spark, sf_dir):
@@ -64,7 +61,7 @@ def test_topk_is_take_ordered(spark, sf_dir):
 
 def test_codegen_engaged(spark, sf_dir):
     df = QUERIES["agg_pricing_summary"](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    plan = plan_of(df, "codegen")
     assert "WholeStageCodegen" in plan, plan
 
 
@@ -169,7 +166,7 @@ def test_selfjoin_signature_reuse(spark, sf_dir, key):
     the expensive token-explode signature computation runs once."""
     df = QUERIES[key](spark, sf_dir)
     df.collect()  # finalize the adaptive plan
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+    plan = plan_of(df, "simple")
     n_reuse = plan.count("ReusedExchange") + plan.count("ReusedQueryStage")
     assert n_reuse >= 1, f"{key}: signature exchange not reused\n{plan}"
 
@@ -440,7 +437,7 @@ def test_q11_scalar_total_broadcast_no_second_scan(spark, sf_dir):
     plan = plan_of(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     df.collect()  # finalize the adaptive plan
-    final = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+    final = plan_of(df, "simple")
     n_reuse = final.count("ReusedExchange") + final.count("ReusedQueryStage")
     assert n_reuse >= 1, f"part-value exchange not reused\n{final}"
 
@@ -496,7 +493,7 @@ def test_width_bucket_codegen_projection(spark, sf_dir):
     df = QUERIES["fn_width_bucket"](spark, sf_dir)
     plan = plan_of(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
-    cg = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
+    cg = plan_of(df, "codegen")
     assert "WholeStageCodegen" in cg, cg
 
 
@@ -624,7 +621,7 @@ def test_chi2_cell_exchange_reused(spark, sf_dir):
     exchange instead of re-scanning the fact per consumer."""
     df = QUERIES["wl_chi2_assoc"](spark, sf_dir)
     df.collect()
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+    plan = plan_of(df, "simple")
     n_reuse = plan.count("ReusedExchange") + plan.count("ReusedQueryStage")
     assert n_reuse >= 1, plan
 

@@ -12,17 +12,27 @@ minimal corpus.
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 pytestmark = pytest.mark.slow  # builder tier: full-registry sweep (see pytest.ini)
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from systematic_review_classification_spark import all_oracles, all_queries
-import duckdb
+from tests.harness import check_keys, write_tables
 
-from tests.harness import canonical_rows
-from tests.worlds import ddl
+
+def _holds(spark, path, tables, keys, what, layout="coalesce", **schema):
+    """Write ``tables`` under path (one part per table by default) and
+    assert every key matches its oracle on them."""
+    write_tables(spark, path, tables, layout, **schema)
+    fails = check_keys(spark, path, keys)
+    assert not fails, f"diverged on {what}: {fails}"
+
+
+# the events columns without props, for the tests that never read it
+_NO_PROPS = {"events": ["event_id", "ts", "user_id", "event_type", "value"]}
 
 # Words mix ascii, unicode, quoting, and digits; texts are space-joined
 # so both engines' tokenizers see identical boundaries.
@@ -80,23 +90,8 @@ def test_document_oracles_hold_on_generated_corpora(spark, corpus_dir, corpus):
         (i, text, lang, source, len(text))
         for i, (text, lang, source) in enumerate(corpus)
     ]
-    path = str(corpus_dir / "case")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/documents.parquet/*.parquet')"
-    )
-    try:
-        for key in _KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated corpus {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "case", {"documents": rows}, _KEYS,
+           f"generated corpus {rows!r}")
 
 
 _EVT_TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -165,30 +160,13 @@ def test_event_oracles_hold_on_generated_streams(spark, corpus_dir, events):
     COLLIDING timestamps (same user, same second — the tie-break
     determinism the synthetic fixtures barely exercise) and deep
     per-user sequences (EWMA fold order, trigram leads)."""
-    import datetime as dt
-
     base = dt.datetime(2024, 3, 1)
     rows = [
         (i, base + dt.timedelta(seconds=off), uid, typ, cents / 100.0)
         for i, (off, uid, typ, cents) in enumerate(events)
     ]
-    path = str(corpus_dir / "evcase")
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/events.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/events.parquet/*.parquet')"
-    )
-    try:
-        for key in _EVENT_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated events {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "evcase", {"events": rows}, _EVENT_KEYS,
+           f"generated events {rows!r}", cols=_NO_PROPS)
 
 
 _DATES = [
@@ -236,8 +214,6 @@ def test_order_oracles_hold_on_generated_tables(spark, corpus_dir, orders):
     ops: period edges (half/year boundaries, a leap day), duplicated
     (custkey, orderdate) pairs (running-sum tie-breaks), and the full
     price range (Benford's floor-guarded digit cast)."""
-    import datetime as dt
-
     o_rows = [
         (i + 1, ck, stat, cents / 100.0, dt.date.fromisoformat(day), prio)
         for i, (ck, stat, cents, day, prio) in enumerate(orders)
@@ -248,35 +224,11 @@ def test_order_oracles_hold_on_generated_tables(spark, corpus_dir, orders):
          dt.date(1997, 1, 1))
         for o in o_rows
     ]
-    path = str(corpus_dir / "ordcase")
-    spark.createDataFrame(
-        o_rows,
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double,"
-        " o_orderdate date, o_orderpriority string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/orders.parquet")
-    spark.createDataFrame(
-        c_rows, "c_custkey long, c_name string, c_acctbal double, c_mktsegment string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/customer.parquet")
-    spark.createDataFrame(
-        l_rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double, l_tax double,"
-        " l_returnflag string, l_linestatus string, l_shipdate date",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    for t in ("orders", "customer", "lineitem"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}/{t}.parquet/*.parquet')"
-        )
-    try:
-        for key in _ORDER_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated orders {o_rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "ordcase",
+           {"orders": o_rows, "customer": c_rows, "lineitem": l_rows}, _ORDER_KEYS,
+           f"generated orders {o_rows!r}",
+           cols={"customer": ["c_custkey", "c_name", "c_acctbal", "c_mktsegment"]},
+           retype={"orders": {"o_orderdate": "date"}, "lineitem": {"l_shipdate": "date"}})
 
 
 # --- functions/ranks.py: the two-pass primitives vs the naive window ---
@@ -406,23 +358,8 @@ def test_long_document_oracles_hold(spark, corpus_dir, corpus):
         (i, text, lang, source, len(text))
         for i, (text, lang, source) in enumerate(corpus)
     ]
-    path = str(corpus_dir / "longcase")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/documents.parquet/*.parquet')"
-    )
-    try:
-        for key in _LONG_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated corpus {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "longcase", {"documents": rows}, _LONG_KEYS,
+           f"generated corpus {rows!r}")
 
 
 # --- r4: embedding-space keys on INTEGER-valued vectors ---
@@ -461,23 +398,8 @@ _EMB_KEYS = [
 @given(table=_EMB_TABLE)
 def test_embedding_oracles_hold_on_generated_vectors(spark, corpus_dir, table):
     rows = [(i, vec, label) for i, (vec, label) in enumerate(table)]
-    path = str(corpus_dir / "embcase")
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/embeddings.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/embeddings.parquet/*.parquet')"
-    )
-    try:
-        for key in _EMB_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated embeddings {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "embcase", {"embeddings": rows}, _EMB_KEYS,
+           f"generated embeddings {rows!r}")
 
 
 # --- r4c: the join family on generated tables with FULL schemas ---
@@ -527,9 +449,6 @@ _JOIN_KEYS = [
 )
 @given(custs=_CUST, orders=_ORDERS)
 def test_join_oracles_hold_on_generated_tables(spark, corpus_dir, custs, orders):
-    import datetime as dt
-
-    path = str(corpus_dir / "joincase")
     c_rows = [
         (k + 1, f"cust{k + 1}", nk, float(bal), seg)
         for k, (nk, seg, bal) in enumerate(custs)
@@ -560,24 +479,7 @@ def test_join_oracles_hold_on_generated_tables(spark, corpus_dir, custs, orders)
         "orders": o_rows,
         "lineitem": l_rows,
     }
-    for t, rows in tables.items():
-        spark.createDataFrame(rows, ddl(t)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/{t}.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}/{t}.parquet/*.parquet')"
-        )
-    try:
-        for key in _JOIN_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated join tables"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "joincase", tables, _JOIN_KEYS, "generated join tables")
 
 
 # --- r4c: streaming tier on generated collision streams ---
@@ -596,40 +498,16 @@ _STREAM_KEYS = ["stream_tumbling", "stream_sliding", "stream_session"]
 )
 @given(events=_EVENTS)
 def test_streaming_oracles_hold_on_generated_streams(spark, corpus_dir, events):
-    import datetime as dt
-    import os
-
     base = dt.datetime(2024, 3, 1)
     rows = [
         (i, base + dt.timedelta(seconds=off), uid, typ, cents / 100.0, "{}")
         for i, (off, uid, typ, cents) in enumerate(events)
     ]
-    path = str(corpus_dir / "streamcase")
-    os.makedirs(path, exist_ok=True)
     # streaming staging symlinks {sf_dir}/events.parquet as ONE FILE
     # (the fixture layout); a Spark-written parquet DIRECTORY would be
-    # invisible to the file-stream source — write via DuckDB instead
-    wcon = duckdb.connect()
-    wcon.execute(
-        "CREATE TABLE ev (event_id BIGINT, ts TIMESTAMP, user_id BIGINT,"
-        " event_type VARCHAR, value DOUBLE, props VARCHAR)"
-    )
-    wcon.executemany("INSERT INTO ev VALUES (?, ?, ?, ?, ?, ?)", rows)
-    wcon.execute(f"COPY ev TO '{path}/events.parquet' (FORMAT PARQUET)")
-    wcon.close()
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/events.parquet')"
-    )
-    try:
-        for key in _STREAM_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated stream {rows!r}"
-    finally:
-        con.close()
+    # invisible to the file-stream source
+    _holds(spark, corpus_dir / "streamcase", {"events": rows}, _STREAM_KEYS,
+           f"generated stream {rows!r}", layout="file")
 
 
 # r5 (verdict r4 item 2): the spread-dividing statistics, fuzzed HARD on
@@ -668,30 +546,13 @@ def test_stat_oracles_survive_degenerate_series(spark, corpus_dir, events):
     distributions: every data-derived denominator in the stat family
     must null out identically on both engines — never DIVIDE_BY_ZERO
     (wl_autocorrelation's r4 bug class)."""
-    import datetime as dt
-
     base = dt.datetime(2024, 3, 1)
     rows = [
         (i, base + dt.timedelta(seconds=off), uid, typ, cents / 100.0)
         for i, (off, uid, typ, cents) in enumerate(events)
     ]
-    path = str(corpus_dir / "statcase")
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, value double"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/events.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/events.parquet/*.parquet')"
-    )
-    try:
-        for key in _STAT_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on degenerate series {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "statcase", {"events": rows}, _STAT_KEYS,
+           f"degenerate series {rows!r}", cols=_NO_PROPS)
 
 # --- r6: documents-ratio family — every remaining key that divides by
 # a data-derived quantity (verdict r5 asked that the fuzz cover the
@@ -734,10 +595,6 @@ def test_doc_ratio_oracles_survive_degenerate_corpora(spark, corpus_dir, corpus)
         (i, text, lang, source, len(text))
         for i, (text, lang, source) in enumerate(corpus)
     ]
-    path = str(corpus_dir / "ratiocase")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/documents.parquet")
     # the ml_eval_* scorers read scores from embeddings keyed by doc_id:
     # deterministic small-integer vectors (exact in float64), including
     # the all-same-label case the mono-language corpus drives
@@ -745,25 +602,8 @@ def test_doc_ratio_oracles_survive_degenerate_corpora(spark, corpus_dir, corpus)
         (i, [float((i + j) % 5 - 2) for j in range(64)], i % 2)
         for i, _ in enumerate(corpus)
     ]
-    spark.createDataFrame(
-        emb_rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/embeddings.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/documents.parquet/*.parquet')"
-    )
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/embeddings.parquet/*.parquet')"
-    )
-    try:
-        for key in _DOC_RATIO_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on degenerate corpus {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "ratiocase", {"documents": rows, "embeddings": emb_rows},
+           _DOC_RATIO_KEYS, f"degenerate corpus {rows!r}")
 
 
 # --- JSON props fuzzing (round 10) ---------------------------------
@@ -838,33 +678,14 @@ def test_json_cast_oracles_hold_on_generated_props(spark, corpus_dir, props):
     non-integral doubles (trunc-vs-round), numeric-ish strings
     (signed, padded, full-width, decimal), bools, JSON null, missing
     key, and malformed documents."""
-    import datetime as dt
-
     base = dt.datetime(2024, 3, 1)
     rows = [
         (i, base + dt.timedelta(hours=i), (i % 3) + 1,
          ["click", "view", "purchase"][i % 3], 5.0 * (i + 1), p)
         for i, p in enumerate(props)
     ]
-    path = str(corpus_dir / "jsoncase")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/events.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/events.parquet/*.parquet')"
-    )
-    try:
-        for key in _JSON_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated props {props!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "jsoncase", {"events": rows}, _JSON_KEYS,
+           f"generated props {props!r}")
 
 
 # --- try_cast family fuzzing (round 10) ----------------------------
@@ -898,33 +719,13 @@ def test_try_cast_oracle_holds_on_generated_lineitem(spark, corpus_dir, rows):
     """fn_try must agree cross-engine for ANY double quantity
     (truncation, int32 overflow, NaN/inf → NULL) and ANY returnflag
     token (integral-after-ASCII-trim or NULL)."""
-    import datetime as dt
-
     li = [
         (i, i, i, ln, q, 100.0 * (i + 1), 0.05, 0.02, flag, "O",
          dt.datetime(1997, 3, 2))
         for i, (q, flag, ln) in enumerate(rows)
     ]
-    path = str(corpus_dir / "trycastcase")
-    spark.createDataFrame(
-        li,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate timestamp_ntz",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/lineitem.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}/lineitem.parquet/*.parquet')"
-    )
-    try:
-        sp = canonical_rows(queries["fn_try"](spark, path).toPandas())
-        du = canonical_rows(con.execute(oracles["fn_try"]).df())
-        assert sp == du, f"[fn_try] diverged on generated lineitem {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "trycastcase", {"lineitem": li}, ["fn_try"],
+           f"generated lineitem {rows!r}")
 
 
 # --- embedding-vector fuzzing (round 10) ---------------------------
@@ -963,23 +764,8 @@ def test_vector_oracles_hold_on_generated_embeddings(spark, corpus_dir, vecs):
     CLEAN_VEC hygiene pair, and the survivors' math (including
     denormals and signed zeros) hashes identically."""
     rows = [(i, v, lbl) for i, (v, lbl) in enumerate(vecs)]
-    path = str(corpus_dir / "veccase")
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/embeddings.parquet")
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/embeddings.parquet/*.parquet')"
-    )
-    try:
-        for key in _VEC_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, f"[{key}] diverged on generated embeddings {rows!r}"
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "veccase", {"embeddings": rows}, _VEC_KEYS,
+           f"generated embeddings {rows!r}")
 
 
 # --- scattered-layout moment fuzzing (round 11) ---------------------
@@ -1026,7 +812,6 @@ def test_moment_oracles_hold_on_scattered_layouts(spark, corpus_dir, case):
     Spark's split order ≠ insertion order, so agreement proves the
     fitted moments (and the SIGNS of their zero residues) are
     read-order-independent."""
-    import datetime as dt
     import random as _random
 
     mode, rows, n_parts, seed = case
@@ -1048,33 +833,6 @@ def test_moment_oracles_hold_on_scattered_layouts(spark, corpus_dir, case):
              dt.datetime(1997, 3, 2))
         )
     _random.Random(seed).shuffle(li)
-    path = str(corpus_dir / "momentcase")
-    (
-        spark.createDataFrame(
-            li,
-            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
-            " l_quantity double, l_extendedprice double, l_discount double,"
-            " l_tax double, l_returnflag string, l_linestatus string,"
-            " l_shipdate timestamp_ntz",
-        )
-        .repartition(n_parts)
-        .write.mode("overwrite")
-        .parquet(f"{path}/lineitem.parquet")
-    )
-
-    queries, oracles = all_queries(), all_oracles()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT *"
-        f" FROM read_parquet('{path}/lineitem.parquet/*.parquet')"
-    )
-    try:
-        for key in _MOMENT_KEYS:
-            sp = canonical_rows(queries[key](spark, path).toPandas())
-            du = canonical_rows(con.execute(oracles[key]).df())
-            assert sp == du, (
-                f"[{key}] diverged on scattered layout"
-                f" mode={mode} parts={n_parts} seed={seed} rows={rows!r}"
-            )
-    finally:
-        con.close()
+    _holds(spark, corpus_dir / "momentcase", {"lineitem": li}, _MOMENT_KEYS,
+           f"scattered layout mode={mode} parts={n_parts} seed={seed} rows={rows!r}",
+           layout=n_parts)

@@ -1,6 +1,7 @@
 """The world tier: every registered key against every dirty-data world
 declared in tests/worlds.py, plus the ingest tests that need a world's
-tables but are not registry sweeps.
+tables but are not registry sweeps, and the fast guards on the slow
+tiers' hand-written specs.
 
 Run one world by name with ``-k``, e.g.
 ``python -m pytest -o addopts= tests/test_worlds.py -k negid``.
@@ -9,14 +10,14 @@ Run one world by name with ``-k``, e.g.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 
 import pytest
 
-from systematic_review_classification_spark.sources.tables import TABLES
-from tests.harness import run_world
-from tests.worlds import (
-    AMBIGUOUS_PROPS, LAYOUTS, ROW_ID, SCHEMA, WORLDS, base, json_events, write,
-)
+from systematic_review_classification_spark import all_oracles, all_queries
+from systematic_review_classification_spark.sources.tables import TABLES, load
+from tests.harness import check_keys, write_tables
+from tests.worlds import AMBIGUOUS_PROPS, LAYOUTS, ROW_ID, SCHEMA, WORLDS, base, json_events
 
 
 @pytest.fixture(scope="module")
@@ -26,7 +27,9 @@ def world_dir(spark, tmp_path_factory):
 
     def get(name):
         if name not in dirs:
-            dirs[name] = write(spark, WORLDS[name], str(tmp_path_factory.mktemp(name)))
+            w = WORLDS[name]
+            dirs[name] = write_tables(spark, tmp_path_factory.mktemp(name), w.tables,
+                                      w.layout, retype=w.retype)
         return dirs[name]
 
     return get
@@ -37,7 +40,8 @@ def world_dir(spark, tmp_path_factory):
 def test_world_sweep(spark, world_dir, name):
     w = WORLDS[name]
     skip = w.all_excluded() | set(w.diverges)
-    fails = run_world(spark, world_dir(name), SCHEMA, skip, duck_casts=w.duck_casts)
+    keys = [k for k in all_queries() if k not in skip]
+    fails = check_keys(spark, world_dir(name), keys, casts=w.duck_casts)
     assert not fails, f"{len(fails)} keys broke on the {name} world: {fails}"
 
 
@@ -48,19 +52,13 @@ def test_world_sweep(spark, world_dir, name):
     for n, w in WORLDS.items() for k, why in w.diverges.items()
 ])
 def test_world_open_divergence(spark, world_dir, name, key):
-    from systematic_review_classification_spark import all_queries
-
-    w = WORLDS[name]
-    others = set(all_queries()) - {key}
-    fails = run_world(spark, world_dir(name), SCHEMA, others, duck_casts=w.duck_casts)
+    fails = check_keys(spark, world_dir(name), [key], casts=WORLDS[name].duck_casts)
     assert not fails, fails
 
 
 def test_world_specs_are_consistent():
     """Fast-tier guard for the slow sweep: a typo in a world spec fails
     here in seconds instead of two hours into the slow tier."""
-    from systematic_review_classification_spark import all_queries
-
     registered = set(all_queries())
     assert set(SCHEMA) == set(TABLES)
     for name, w in WORLDS.items():
@@ -87,17 +85,30 @@ def test_world_specs_are_consistent():
             assert len(ids) == len(set(ids)), f"{name}.{t}: duplicate primary key"
 
 
+def test_slow_tier_key_lists_are_consistent():
+    """The same guard over the slow tiers' hand-written key lists (the
+    property fuzzers' ``_*_KEYS`` and the empty-corpus sweep): every
+    key registered, oracled where it is compared, and listed once."""
+    from tests import test_property
+    from tests.test_edge_values import EMPTY_CORPUS_KEYS
+
+    registered, oracled = set(all_queries()), set(all_oracles())
+    compared = {n: v for n, v in vars(test_property).items()
+                if n.endswith("_KEYS") and isinstance(v, list)}
+    assert "_KEYS" in compared  # the guard still sees the fuzzers' lists
+    for name, keys in {**compared, "EMPTY_CORPUS_KEYS": EMPTY_CORPUS_KEYS}.items():
+        assert len(keys) == len(set(keys)), (name, {k for k in keys if keys.count(k) > 1})
+        assert set(keys) <= registered, (name, set(keys) - registered)
+        if name in compared:
+            assert set(keys) <= oracled, (name, set(keys) - oracled)
+
+
 @pytest.mark.slow
 def test_json_keys_abort_safe_on_ambiguous_json(spark, tmp_path):
     """Duplicate-key / beyond-range JSON (the badjson world's
     AMBIGUOUS_PROPS): values are out of contract, but the Spark side
     must still null-propagate, never crash."""
-    from dataclasses import replace
-
-    from systematic_review_classification_spark import all_queries
-
-    w = replace(WORLDS["badjson"], tables=base(events=json_events(AMBIGUOUS_PROPS)))
-    d = write(spark, w, str(tmp_path))
+    d = write_tables(spark, tmp_path, base(events=json_events(AMBIGUOUS_PROPS)))
     queries = all_queries()
     for key in ("fn_json", "fn_map", "fn_variant"):
         rows = queries[key](spark, d).collect()
@@ -116,35 +127,17 @@ def test_json_keys_abort_safe_on_ambiguous_json(spark, tmp_path):
 
 @pytest.mark.slow
 def test_wider_than_canonical_drift_fails_loudly_at_ingest(spark, tmp_path):
-    from systematic_review_classification_spark.sources.tables import load
-
-    d = str(tmp_path / "wide_world")
-    spark.createDataFrame(
-        [(1, 1, 1, 1, 10.0, 1000.0, 0.05, 0.02, "N", "O",
-          dt.datetime(1997, 3, 2))],
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
-        " l_linenumber bigint, l_quantity double, l_extendedprice double,"
-        " l_discount double, l_tax double, l_returnflag string,"
-        " l_linestatus string, l_shipdate timestamp_ntz",
-    ).write.parquet(f"{d}/lineitem.parquet")
+    d = write_tables(spark, tmp_path / "wide_world", {"lineitem": [
+        (1, 1, 1, 1, 10.0, 1000.0, 0.05, 0.02, "N", "O", dt.datetime(1997, 3, 2))
+    ]}, retype={"lineitem": {"l_linenumber": "bigint"}})
     with pytest.raises(ValueError, match="l_linenumber.*not an exact widening"):
         load(spark, d, "lineitem")
 
 
 @pytest.mark.slow
 def test_lossy_decimal_drift_fails_loudly_at_ingest(spark, tmp_path):
-    from systematic_review_classification_spark.sources.tables import load
-
-    d = str(tmp_path / "decimal_world")
-    spark.createDataFrame(
-        [(1, 1, "O", 1000.50, dt.datetime(1997, 3, 1), "1-URGENT")],
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp_ntz,"
-        " o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey", "o_custkey", "o_orderstatus",
-        "CAST(o_totalprice AS DECIMAL(12,2)) AS o_totalprice",
-        "o_orderdate", "o_orderpriority",
-    ).write.parquet(f"{d}/orders.parquet")
+    d = write_tables(spark, tmp_path / "decimal_world", {"orders": [
+        (1, 1, "O", decimal.Decimal("1000.50"), dt.datetime(1997, 3, 1), "1-URGENT")
+    ]}, retype={"orders": {"o_totalprice": "decimal(12,2)"}})
     with pytest.raises(ValueError, match="o_totalprice.*not an exact widening"):
         load(spark, d, "orders")

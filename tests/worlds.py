@@ -2,7 +2,8 @@
 
 A world is one pathological dataset over the ten engine tables. The
 sweep (tests/test_worlds.py::test_world_sweep) writes it as parquet
-and runs EVERY registered key against it via ``tests.harness.run_world``.
+with ``tests.harness.write_tables`` and runs EVERY registered key
+against it via ``tests.harness.check_keys``.
 Each world is a function decorated with ``@world``: its docstring is
 the hazard it prices (the reason the world exists), its return value
 is the rows per table, and the decorator carries what differs from
@@ -15,7 +16,6 @@ exclusions every world needs — is written once below.
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import inspect
 from dataclasses import dataclass, field
 
@@ -78,13 +78,21 @@ BASE_EXCLUDED = frozenset({
 
 _LEVENSHTEIN = "documented engine divergence: DuckDB levenshtein counts UTF-8 bytes, Spark characters"
 
-LAYOUTS = ("single", "scatter5", "degenerate_parts")
+# tests.harness.write_tables layouts a world may use (5: five parts)
+LAYOUTS = ("single", 5, "degenerate_parts")
 
 
-def ddl(table: str, retype: dict[str, str] | None = None) -> str:
-    """Spark DDL for ``table``: SCHEMA with any ``retype`` overrides."""
+def ddl(table: str, retype: dict[str, str] | None = None, cols=None) -> str:
+    """Spark DDL for ``table``: SCHEMA with any ``retype`` overrides,
+    limited to ``cols`` (in their order) when given."""
     over = retype or {}
-    return ", ".join(f"{c} {over.get(c, ty)}" for c, ty in SCHEMA[table].items())
+    return ", ".join(f"{c} {over.get(c, SCHEMA[table][c])}" for c in cols or SCHEMA[table])
+
+
+# Spark type -> DuckDB type, for oracle-view casts and DuckDB-written files
+DUCK_TYPES = {"int": "INTEGER", "long": "BIGINT", "bigint": "BIGINT", "double": "DOUBLE",
+              "string": "VARCHAR", "timestamp_ntz": "TIMESTAMP", "date": "DATE",
+              "array<float>": "FLOAT[]", "array<double>": "DOUBLE[]"}
 
 
 @dataclass(frozen=True)
@@ -92,7 +100,7 @@ class World:
     reason: str  # the hazard the world prices: its function's docstring
     tables: dict[str, list]
     excluded: dict[str, str] = field(default_factory=dict)  # key -> reason
-    layout: str = "single"
+    layout: str | int = "single"
     retype: dict[str, dict[str, str]] = field(default_factory=dict)
     duck_casts: dict[str, dict[str, str]] | None = None
     # key -> its failing output: an open engine divergence this world
@@ -127,45 +135,6 @@ def world(excluded=None, layout="single", retype=None, duck_casts=None, compose=
         return fn
 
     return register
-
-
-def write(spark, w: World, root: str) -> str:
-    """Write world ``w`` as one parquet directory per table under root."""
-    for t in SCHEMA:
-        rows, path = w.tables[t], f"{root}/{t}.parquet"
-
-        def df(rs, t=t):
-            return spark.createDataFrame(rs, w.ddl(t))
-
-        if w.layout == "single":
-            df(rows).write.parquet(path)
-        elif w.layout == "scatter5":
-            # round-robin repartition scatters rows across 5 parts in
-            # neither key nor insertion order — the adversarial layout
-            df(rows).repartition(5).write.parquet(path)
-        else:
-            # 1-row part, the remaining rows scattered across 3
-            # shuffled parts, then one ZERO-row part (rows=[] with
-            # coalesce(1) commits a file holding only schema metadata)
-            df(rows[:1]).coalesce(1).write.mode("append").parquet(path)
-            df(rows[1:]).repartition(3).write.mode("append").parquet(path)
-            df([]).coalesce(1).write.mode("append").parquet(path)
-            _check_degenerate_parts(path)
-    return root
-
-
-def _check_degenerate_parts(path: str) -> None:
-    """The layout must actually contain a 0-row and a 1-row part, or
-    the world tests nothing — guard against Spark versions that skip
-    the file. repartition SKIPS empty partitions on write, so tiny
-    tables emit <3 scatter files: expect >=3 parts in all."""
-    import pyarrow.parquet as pq
-
-    parts = glob.glob(f"{path}/*.parquet")
-    assert len(parts) >= 3, f"{path}: expected >=3 parts, got {len(parts)}"
-    sizes = sorted(pq.ParquetFile(p).metadata.num_rows for p in parts)
-    assert sizes[0] == 0, f"{path}: no zero-row part was written ({sizes})"
-    assert 1 in sizes, f"{path}: no single-row part was written ({sizes})"
 
 
 # key columns offset per source world so unioned worlds don't collide;
@@ -1200,7 +1169,7 @@ def _multifile_rows():
     }
 
 
-@world(layout="scatter5")
+@world(layout=5)
 def multifile():
     """The MULTI-FILE SCATTER world: every table physically split across
     several tiny parquet files in shuffled row order, every oracled key
@@ -1263,9 +1232,6 @@ _TEMPORAL_DRIFT = {
     "events": {**_DRIFT["events"], "ts": "string"},
 }
 
-_DUCK_TYPES = {"int": "INTEGER", "bigint": "BIGINT", "double": "DOUBLE",
-               "timestamp_ntz": "TIMESTAMP"}
-
 
 def _duck_casts(**extra):
     """The oracle-view mirror of load()'s ingest normalization, built
@@ -1273,7 +1239,7 @@ def _duck_casts(**extra):
     drift apart."""
     from systematic_review_classification_spark.sources.tables import _CANONICAL
 
-    casts = {t: {c: _DUCK_TYPES[ty] for c, ty in cols.items()}
+    casts = {t: {c: DUCK_TYPES[ty] for c, ty in cols.items()}
              for t, cols in _CANONICAL.items()}
     for t, cols in extra.items():
         casts.setdefault(t, {}).update(cols)

@@ -15,6 +15,7 @@ repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo_root)
 
 from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
+from tests.harness import plan_of  # noqa: E402
 
 
 def main() -> None:
@@ -27,10 +28,7 @@ def main() -> None:
 
     queries = all_queries()
     for key in keys:
-        df = queries[key](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_of(queries[key](spark, sf_dir))
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

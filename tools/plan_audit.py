@@ -28,12 +28,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
+from tests.harness import plan_of  # noqa: E402
 
 
 def plan_features(df) -> dict:
-    s = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    s = plan_of(df)
     return {
         "cartesian": s.count("CartesianProduct"),
         "bnlj": s.count("BroadcastNestedLoopJoin"),

@@ -32,8 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from systematic_review_classification_spark import all_queries, get_session  # noqa: E402
 from systematic_review_classification_spark.sources.tables import TABLES, load  # noqa: E402
-from tests.test_build_budget import _py4j_calls  # noqa: E402
-from tests.test_load_memo import _jobs_during  # noqa: E402
+from tests.harness import jobs_during, py4j_calls  # noqa: E402
 
 
 def main() -> None:
@@ -54,8 +53,8 @@ def main() -> None:
     for key, fn in all_queries().items():
         t0 = time.perf_counter()
         try:
-            (df, calls), jobs = _jobs_during(
-                spark, lambda: _py4j_calls(spark, lambda: fn(spark, sf_dir))
+            (df, calls), jobs = jobs_during(
+                spark, lambda: py4j_calls(spark, lambda: fn(spark, sf_dir))
             )
             build_s = time.perf_counter() - t0
             df.count()
